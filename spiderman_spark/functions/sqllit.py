@@ -21,6 +21,7 @@ round trip, with values bit-identical to the ``F.lit`` forms they replace:
 """
 
 import math
+import numbers
 
 from pyspark.sql import functions as F
 
@@ -44,13 +45,24 @@ def lit_double_array(vals):
     return F.expr("array(" + ",".join(_sql_double(v) for v in vals) + ")")
 
 
-def lit_str_map(d: dict, valfmt=str):
+def _sql_int(v) -> str:
+    # bool is an int subclass, but str(True) would parse as a column name
+    if isinstance(v, bool) or not isinstance(v, numbers.Integral):
+        raise TypeError(f"lit_str_map: default valfmt needs int values, got {v!r}")
+    return str(v)
+
+
+def lit_str_map(d: dict, valfmt=_sql_int):
     """Literal ``map<string, T>`` column in one parsed expression.
 
-    ``valfmt`` renders each value as a SQL literal snippet (default ``str``
-    — correct for ints).  Keys and values iterate the same dict, so the
-    arrays always align.
+    ``valfmt`` renders each value as a SQL literal snippet (default: ints
+    only — bools and other types raise ``TypeError``).  ``d`` must be
+    non-empty: ``map_from_arrays(array(), array())`` has no key type, so an
+    empty dict raises ``ValueError``.  Keys and values iterate the same
+    dict, so the arrays always align.
     """
+    if not d:
+        raise ValueError("lit_str_map: empty dict has no map type")
     ks = ",".join(sql_str(k) for k in d)
     vs = ",".join(valfmt(v) for v in d.values())
     return F.expr(f"map_from_arrays(array({ks}), array({vs}))")

@@ -7,7 +7,7 @@ scrapy_redis==0.6.8 whose filter delegates to scrapy's
 request_fingerprint.  We reproduce the skeleton (sha1 over
 method + canonicalized URL; our synthetic requests carry no body) and keep the
 whole thing a pure function so it can run driver-side (simulator) and inside
-Arrow-vectorized pandas UDFs (engine) unchanged.
+the engine's Arrow parse stage (operators/parse.py) unchanged.
 
 Scale note: the persistent URL-seen table is keyed by ``xxhash64(canonical)``
 (8 bytes vs 40-hex sha1) per the north rule; the sha1 fingerprint column is
@@ -70,11 +70,13 @@ _UDF_CACHE: tuple[str, dict] | None = None
 
 def register_udfs():
     """Column-level vectorized versions. Imported lazily so the pure functions
-    above stay usable without pyspark on the path.  Memoized PER SparkContext
-    (a UserDefinedFunction caches its JVM handle against the context that
-    first used it, so a process that restarts sessions — the scaling bench —
-    must not reuse stale handles): pandas_udf construction is driver/py4j
-    work the crawl round would otherwise repay on every step."""
+    above stay usable without pyspark on the path.  The crawl engine does not
+    use them (parse_pages computes fp/canon in its own Python pass); they
+    serve callers that fingerprint an existing DataFrame.  Memoized PER
+    SparkContext (a UserDefinedFunction caches its JVM handle against the
+    context that first used it, so a process that restarts sessions must not
+    reuse stale handles): pandas_udf construction is driver/py4j work a
+    per-round caller would otherwise repay on every call."""
     global _UDF_CACHE
     from pyspark.sql import SparkSession
 

@@ -12,6 +12,12 @@ Child ordering: each emitted request carries (parent_seq, child_idx) — the
 deterministic key that reproduces the reference's "children pushed in DOM
 order within a page, pages in FIFO order" (SURVEY.md §4.1.1) without any
 dependence on partitioning or scheduling.
+
+Each request row also carries its dedup key ``fp`` and ``canon``, computed in
+the same Python loop by the shared ``urltools`` functions, so the crawl round
+needs no second Python stage to fingerprint its children (item rows carry
+NULL).  A Python task's fixed start-up cost, not its rows, dominates this
+stage at crawl-round sizes (see plans/crawl.py).
 """
 
 from __future__ import annotations
@@ -21,13 +27,16 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.urltools import canonical, fingerprint
 from ..parselib import parse_body
 
 PARSE_OUT_DDL = (
     "out_kind string, tablename string, item_json string,"
     " url string, method string, callback string, body string,"
-    " meta_json string, parent_seq long, child_idx int, parent_url string"
+    " meta_json string, parent_seq long, child_idx int, parent_url string,"
+    " fp string, canon string"
 )
+_PARSE_OUT_COLS = [c.split()[0] for c in PARSE_OUT_DDL.split(",")]
 
 
 def parse_pages(fetched_ok: DataFrame, parse_fn=None) -> DataFrame:
@@ -60,32 +69,32 @@ def parse_pages(fetched_ok: DataFrame, parse_fn=None) -> DataFrame:
                             "parent_seq": int(seq),
                             "child_idx": 0,
                             "parent_url": url,
+                            "fp": None,
+                            "canon": None,
                         }
                     )
                 for idx, child in enumerate(children):
+                    curl = child["url"]
+                    method = child.get("method", "GET")
+                    cbody = child.get("body", "") or ""
                     out.append(
                         {
                             "out_kind": "request",
                             "tablename": None,
                             "item_json": None,
-                            "url": child["url"],
-                            "method": child.get("method", "GET"),
+                            "url": curl,
+                            "method": method,
                             "callback": child["callback"],
-                            "body": child.get("body", "") or "",
+                            "body": cbody,
                             "meta_json": json.dumps(child.get("meta", {})),
                             "parent_seq": int(seq),
                             "child_idx": idx,
                             "parent_url": url,
+                            "fp": fingerprint(method, curl, cbody),
+                            "canon": canonical(curl),
                         }
                     )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "out_kind", "tablename", "item_json", "url", "method",
-                    "callback", "body", "meta_json", "parent_seq", "child_idx",
-                    "parent_url",
-                ],
-            )
+            yield pd.DataFrame(out, columns=_PARSE_OUT_COLS)
 
     return fetched_ok.select("seq", "url", "body").mapInPandas(run, PARSE_OUT_DDL)
 
@@ -106,5 +115,6 @@ def items_of(parsed: DataFrame, tablename: str, ddl: str) -> DataFrame:
 
 def requests_of(parsed: DataFrame) -> DataFrame:
     return parsed.where(F.col("out_kind") == "request").select(
-        "url", "method", "callback", "body", "meta_json", "parent_seq", "child_idx"
+        "url", "method", "callback", "body", "meta_json", "parent_seq",
+        "child_idx", "fp", "canon",
     )

@@ -38,6 +38,17 @@ funnels through one task.  The offset-collect jobs double as the round's row
 counts, and the five per-round state writes run concurrently, keeping the
 fixed driver barrier to ~2 small actions + max(write) instead of
 count + 5 sequential writes.
+
+Python cost: a round runs exactly ONE Python stage — ``parse_pages``, which
+also computes each child's ``fp``/``canon`` — with at most one task per core.
+At crawl-round sizes that stage's cost is per TASK, not per row: on a 4-core
+VM (PySpark 4.1, CPython 3.11) each Python task spends ~0.25 s of a core
+before it reads a row (94 % of it in the per-task
+``importlib.invalidate_caches()``, which makes zipimport re-read
+pyspark.zip's directory once per zipimporter on the worker path), while
+parsing costs ~58 µs a page and fp+canon ~6 µs a child.  So a second
+Python stage, or a second wave of tasks, costs more than all of a round's
+Python work.
 """
 
 from __future__ import annotations
@@ -72,7 +83,13 @@ CRAWL_ORDER_DDL = (
     " ua string, cookie string"
 )
 FAILED_DDL = "url string, reason string, attempt int, round int"
-METRICS_DDL = "round int, host string, n long"
+# item rows of the parse union, without the request-only fp/canon columns
+ITEMS_RAW_DDL = (
+    "out_kind string, tablename string, item_json string, url string,"
+    " method string, callback string, body string, meta_json string,"
+    " parent_seq long, child_idx int, parent_url string"
+)
+ITEMS_RAW_COLS = [c.split()[0] for c in ITEMS_RAW_DDL.split(",")]
 
 # per-host fetch metrics are DERIVED from crawl_order (same rows, grouped) —
 # one less write per round and one less table to keep consistent
@@ -94,13 +111,15 @@ class CrawlConfig:
     # executor memory; past that the corpus-side shuffle parallelizes better)
     broadcast_eligible: bool | None = None
     broadcast_max_rows: int = 300_000
-    # hash-rebalance the parse input across cores: parse COST is per-child,
-    # not per-page (a hub page with 1000 out-links costs 50x a leaf), and the
-    # fetch-join output clusters hubs by scan order — measured on BENCH_XXL
-    # as a 2-straggler-task parse tail that serialized ~45 µs/page of an
-    # otherwise parallel stage.  One extra shuffle of the round's page rows
-    # buys a balanced Arrow/Python parse wave; at web scale hub/leaf mixes
-    # are the norm, so this is on by default.
+    # hash-rebalance the parse input to min(cores, eligible pages) tasks:
+    # parse COST is per-child, not per-page (a hub page with 1000 out-links
+    # costs 50x a leaf), and the fetch-join output clusters hubs by scan
+    # order — measured on BENCH_XXL as a 2-straggler-task parse tail that
+    # serialized ~45 µs/page of an otherwise parallel stage.  Never more
+    # than one task per core: each Python task's ~0.25 s start-up (PySpark's
+    # per-task importlib.invalidate_caches(); see the module docstring) is
+    # the cost of parsing ~4,300 pages at ~58 µs a page, more than any tail
+    # a second wave of finer tasks could even out.
     parse_rebalance: bool = True
     bizdate: str = "20240101"  # injected clock (SURVEY.md §7.3.2)
     ctime: str = "2024-01-01 00:00:00"
@@ -486,15 +505,17 @@ class CrawlEngine:
         )
 
         pages = ok.where(F.col("callback").isin(list(self.spec.page_callbacks)))
+        parse_tasks = None  # the fetch join's partitioning decides
         if cfg.parse_rebalance:
             # spread hub pages uniformly before the Python parse wave (see
-            # CrawlConfig.parse_rebalance); 4x cores = fine tail granularity,
-            # capped by the round's own size so a 3-page tail round doesn't
-            # schedule 128 near-empty parse tasks
-            width = min(
-                4 * self.spark.sparkContext.defaultParallelism, max(1, n_eligible)
+            # CrawlConfig.parse_rebalance): one task per core, capped by the
+            # round's own size so a 3-page tail round doesn't schedule
+            # near-empty Python tasks
+            parse_tasks = min(
+                self.spark.sparkContext.defaultParallelism, max(1, n_eligible)
             )
-            pages = pages.repartition(width, F.xxhash64("url"))
+            pages = pages.repartition(parse_tasks, F.xxhash64("url"))
+        # the round's only Python stage: parse AND the children's fp/canon
         parsed = parse_pages(pages, self.spec.parse).persist()
 
         # ---- child admission: dedup gate (D1) + deterministic seq assignment
@@ -544,12 +565,6 @@ class CrawlEngine:
             reqs = flagged.where("NOT _blocked").drop("_blocked", "_dis")
         if self.shard is not None:
             reqs = self._split_foreign(reqs)
-        from ..functions.urltools import register_udfs
-
-        udfs = register_udfs()
-        reqs = reqs.withColumn(
-            "fp", udfs["fingerprint"]("method", "url", "body")
-        ).withColumn("canon", udfs["canonical"]("url"))
         nofilter_cbs = [cb for cb, dont in cfg.callbacks.items() if dont]
         nofilter = reqs.where(F.col("callback").isin(nofilter_cbs))
         gated = reqs.where(~F.col("callback").isin(nofilter_cbs))
@@ -617,7 +632,7 @@ class CrawlEngine:
             "rank", F.lit(self.round).alias("round"), "url", "host", "attempt",
             "ua", "cookie",
         )
-        items = parsed.where("out_kind = 'item'")
+        items = parsed.where("out_kind = 'item'").select(*ITEMS_RAW_COLS)
 
         n_items_est = n_eligible * 8  # pages emit a handful of items each
         seen_tb = self.catalog.table("url_seen")
@@ -716,6 +731,7 @@ class CrawlEngine:
             "plan_s": round(_t_plan - _t_head, 3),
             "wave_s": round(_t_wave - _t_plan, 3),
             "post_s": round(_time.perf_counter() - _t_wave, 3),
+            "parse_tasks": parse_tasks,
         }
         return n_eligible
 
@@ -773,7 +789,7 @@ class CrawlEngine:
         (
             foreign.select(
                 "url", "host", "method", "callback", "body", "meta_json",
-                "parent_seq", "child_idx", "priority",
+                "parent_seq", "child_idx", "priority", "fp", "canon",
                 F.col("_prank").alias("parent_rank"),
                 F.lit(w).alias("from_worker"), "_w",
             )
@@ -808,13 +824,8 @@ class CrawlEngine:
         fresh = sorted(set(os.listdir(inbox)) - self._ingested)
         if not fresh:
             return 0
+        # handoff rows carry the exporter's parse-stage fp/canon
         reqs = self.spark.read.parquet(*[os.path.join(inbox, f) for f in fresh])
-        from ..functions.urltools import register_udfs
-
-        udfs = register_udfs()
-        reqs = reqs.withColumn(
-            "fp", udfs["fingerprint"]("method", "url", "body")
-        ).withColumn("canon", udfs["canonical"]("url"))
         nofilter_cbs = [cb for cb, dont in self.cfg.callbacks.items() if dont]
         nofilter = reqs.where(F.col("callback").isin(nofilter_cbs))
         gated = reqs.where(~F.col("callback").isin(nofilter_cbs))
@@ -904,12 +915,7 @@ class CrawlEngine:
         """Typed item table with the reference's audit columns
         (P1/D4: keyid, bizdate, ctime, spider — `pipelines_rdbm.py:43-56,85-87`);
         keyid is a deterministic hash instead of uuid1 (SURVEY.md §7.3.2)."""
-        raw = self._read(
-            "items_raw",
-            "out_kind string, tablename string, item_json string, url string,"
-            " method string, callback string, body string, meta_json string,"
-            " parent_seq long, child_idx int, parent_url string",
-        )
+        raw = self._read("items_raw", ITEMS_RAW_DDL)
         cfg = self.cfg
         typed = items_of(raw, tablename, self.spec.item_tables[tablename])
         return (

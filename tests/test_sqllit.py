@@ -7,6 +7,7 @@ must behave identically to the ``F.lit`` key it replaces, for every
 character class a crawl host name or stopword list could ever smuggle in.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from spiderman_spark.functions.sqllit import lit_str_map, sql_str
@@ -63,3 +64,27 @@ def test_sql_str_round_trips(spark):
     exprs = [F.expr(sql_str(k)).alias(f"c{i}") for i, k in enumerate(ADVERSARIAL_KEYS)]
     row = spark.range(1).select(*exprs).collect()[0]
     assert list(row) == ADVERSARIAL_KEYS
+
+
+def test_lit_str_map_rejects_empty_dict():
+    # map_from_arrays(array(), array()) has no key type: fail at the call
+    with pytest.raises(ValueError):
+        lit_str_map({})
+
+
+@pytest.mark.parametrize("val", [True, False, 1.5, "7", None])
+def test_lit_str_map_default_valfmt_rejects_non_ints(val):
+    # str(True) would render as the column name `True`
+    with pytest.raises(TypeError):
+        lit_str_map({"k": val})
+
+
+def test_lit_str_map_explicit_valfmt_and_numpy_ints(spark):
+    import numpy as np
+
+    strs = lit_str_map({"a": "x'y"}, valfmt=sql_str)
+    ints = lit_str_map({"a": np.int64(3)})
+    row = spark.range(1).select(
+        strs[F.lit("a")].alias("s"), ints[F.lit("a")].alias("i")
+    ).collect()[0]
+    assert (row["s"], row["i"]) == ("x'y", 3)
