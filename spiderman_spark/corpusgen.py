@@ -51,14 +51,9 @@ class CorpusSpec:
     minsize: int = 64  # body-size retry threshold (MINSIZE)
     img_lo: int = 16  # image dimension range (px)
     img_hi: int = 64
-    # production-weight pages: append ``body_pad`` chars of deterministic,
-    # low-compressibility filler (hex of seeded random bytes) INSIDE the JSON
-    # body, so scan+parse carry realistic per-page cost.  0 = legacy tiny
-    # bodies (all parity fixtures use 0).
-    body_pad: int = 0
     # True (default): ~1/3 of URLs land on host 0 (exercises per-host skew
     # salting).  False: uniform hosts — the regime of a real 10^7-host web,
-    # where the largest host is far below any worker's share (fleet bench).
+    # where the largest host is far below any worker's share.
     mega_host: bool = True
 
     @property
@@ -70,35 +65,6 @@ class CorpusSpec:
 UNIT = CorpusSpec()
 CORRECTNESS = CorpusSpec(hosts=17, list_pages=50, details_per_page=10, images_per_detail=3)
 BENCH = CorpusSpec(hosts=64, list_pages=500, details_per_page=20, images_per_detail=4)
-# scaling-evidence corpora (BENCH/BASELINE.md measurement study):
-# - BENCH_SCALE: 10x BENCH pages with production-weight (~6KB) bodies —
-#   documents the one-JVM wide-payload thread-scaling collapse (payload
-#   scaling is evidenced with the multi-executor-process protocol instead).
-# - BENCH_XL: 100x BENCH pages (~1M-page rounds), frontier-metadata-weight
-#   bodies — rounds big enough that the parallel term dominates the fixed
-#   round barrier, the regime the north rule's 10^10 frontier lives in.
-BENCH_SCALE = CorpusSpec(
-    hosts=64, list_pages=5000, details_per_page=20, images_per_detail=4,
-    body_pad=6144,
-)
-BENCH_XL = CorpusSpec(
-    hosts=1024, list_pages=50000, details_per_page=20, images_per_detail=4,
-    mega_host=False,
-)
-# - BENCH_XXL: one ~5M-page BFS round (flat 5000 lists × 1000 details, no
-#   images) — the round-size sweep point for the Amdahl fit in
-#   BENCH/BASELINE.md: per-round fixed cost is amortized 20x further than
-#   BENCH_XL, the regime the north rule's 10^7-10^8-page rounds live in.
-BENCH_XXL = CorpusSpec(
-    hosts=1024, list_pages=5000, details_per_page=1000, images_per_detail=0,
-    mega_host=False,
-)
-# scaling-evidence corpus: fewer URLs, production-sized images so the
-# fetch+decode+verify stage (the parallelizable work) dominates round overhead
-BENCH_IMG = CorpusSpec(
-    hosts=64, list_pages=250, details_per_page=20, images_per_detail=4,
-    img_lo=160, img_hi=224,
-)
 
 
 def _h32(spec: CorpusSpec, key: str) -> int:
@@ -154,14 +120,6 @@ def _pad_body(spec: CorpusSpec, url: str, body: str) -> str:
     small = _h32(spec, f"sz:{url}") % spec.small_mod == 0
     if small:
         return body  # left undersized on purpose → size-retry path (P5)
-    if spec.body_pad:
-        import random as _random
-
-        filler = _random.Random(_h32(spec, f"pad:{url}")).randbytes(
-            spec.body_pad // 2
-        ).hex()
-        # splice the filler into the JSON document so parsers must scan it
-        body = body[:-1] + f', "pad": "{filler}"}}'
     if len(body) < spec.minsize:
         body += " " * (spec.minsize - len(body))
     return body

@@ -397,8 +397,9 @@ def minhash_lsh_pairs(
     make |pairs| quadratic in clique size), so broadcasting grams keeps the
     big pair stream from shuffling — but a FORCED broadcast of a 100 TB-scale
     doc table OOMs the driver.  ``None`` (default) adapts on the measured doc
-    count vs ``broadcast_max_rows`` (the ``CrawlConfig.broadcast_eligible``
-    pattern); True/False force.  Above the threshold AQE picks the join.
+    count vs ``broadcast_max_rows`` (the pattern of the crawl round's fetch
+    join, ``plans.crawl.BROADCAST_MAX_ROWS``); True/False force.  Above the
+    threshold AQE picks the join.
 
     ``materialize=True`` (default) computes the verified pairs eagerly
     (``localCheckpoint``) and unpersists the shingle cache before returning —
@@ -425,9 +426,10 @@ def minhash_lsh_pairs(
         # so every stage inherits the scan's partitioning — a small or
         # skewed input would run the bands-times-inflated pair enumeration
         # and the gram-intersection verify on a handful of cores.  Same
-        # reasoning as CrawlConfig.parse_rebalance: pair enumeration cost is
-        # per-collision, not per-doc, so spread docs evenly first (the
-        # shuffle moves only the doc-sized shingle frame, never pairs).
+        # reasoning as the crawl round's parse rebalance (plans/crawl.py
+        # module docstring): pair enumeration cost is per-collision, not
+        # per-doc, so spread docs evenly first (the shuffle moves only the
+        # doc-sized shingle frame, never pairs).
         sh = sh.repartition(df.sparkSession.sparkContext.defaultParallelism, "did")
         sh = sh.persist()
     sigs = sh.select("did", _sig_expr(k, hash_family, prehashed=prehashed).alias("sig"))

@@ -48,7 +48,11 @@ before it reads a row (94 % of it in the per-task
 pyspark.zip's directory once per zipimporter on the worker path), while
 parsing costs ~58 µs a page and fp+canon ~6 µs a child.  So a second
 Python stage, or a second wave of tasks, costs more than all of a round's
-Python work.
+Python work.  The parse input is hash-repartitioned to min(cores, eligible
+pages) tasks anyway: parse cost is per child, not per page (a hub page with
+1000 out-links costs 50x a leaf), and the fetch-join output clusters hubs by
+scan order — left alone, a 5M-page round showed a 2-straggler-task parse
+tail that serialized ~45 µs/page of an otherwise parallel stage.
 """
 
 from __future__ import annotations
@@ -95,6 +99,31 @@ ITEMS_RAW_COLS = [c.split()[0] for c in ITEMS_RAW_DDL.split(",")]
 # one less write per round and one less table to keep consistent
 STATE_TABLES = ("frontier", "url_seen", "crawl_order", "items_raw", "failed")
 
+# fetch-join strategy: broadcast the round batch while it has at most this
+# many rows (a 10^6-row broadcast is serial driver work and executor memory;
+# past that the corpus-side shuffle parallelizes better)
+BROADCAST_MAX_ROWS = 300_000
+# below this (upper-bound) frontier size, politeness runs its per-host
+# window in ONE phase — identical result, one less shuffle; above it the
+# two-phase salted form bounds the mega-host's group (see politeness.py)
+SALT_MIN_ROWS = 131072
+# children get SPARSE seqs: seq = next_seq + (parent_rank-1)*stride +
+# child_idx.  Order-isomorphic to the dense (parent_seq, child_idx)
+# numbering — FIFO/politeness/dedup semantics are identical (only seq
+# ORDER is ever observed) — but needs NO second offsets action per round.
+# Must exceed the max children one page can emit.
+CHILD_STRIDE = 1 << 20
+# rows per written parquet file for per-round state appends; rounds are
+# budget-bounded so appends are small — without this every tiny append
+# would fan out into shuffle.partitions-many files
+ROWS_PER_FILE = 200_000
+# size-tiered url_seen compaction threshold: only manifest entries SMALLER
+# than this are bin-packed; parts that grow past it become base and are
+# only re-read by the occasional smallest-first tier merge
+# (TableIO.compact_small) — compaction I/O stays proportional to appended
+# bytes amortized, not to the url_seen corpus (O(TB) at 10^10)
+COMPACT_THRESHOLD_BYTES = 64 << 20
+
 
 @dataclass
 class CrawlConfig:
@@ -105,22 +134,6 @@ class CrawlConfig:
     retry_times: int = 3  # SP/settings.py:122
     minsize: int = 64  # SizeRetryMiddleWare threshold
     salt_buckets: int = 16
-    # fetch-join strategy: True/False force broadcast/shuffle of the round
-    # batch; None = adaptive — broadcast only while the batch is under
-    # broadcast_max_rows (a 10^6-row broadcast is serial driver work and
-    # executor memory; past that the corpus-side shuffle parallelizes better)
-    broadcast_eligible: bool | None = None
-    broadcast_max_rows: int = 300_000
-    # hash-rebalance the parse input to min(cores, eligible pages) tasks:
-    # parse COST is per-child, not per-page (a hub page with 1000 out-links
-    # costs 50x a leaf), and the fetch-join output clusters hubs by scan
-    # order — measured on BENCH_XXL as a 2-straggler-task parse tail that
-    # serialized ~45 µs/page of an otherwise parallel stage.  Never more
-    # than one task per core: each Python task's ~0.25 s start-up (PySpark's
-    # per-task importlib.invalidate_caches(); see the module docstring) is
-    # the cost of parsing ~4,300 pages at ~58 µs a page, more than any tail
-    # a second wave of finer tasks could even out.
-    parse_rebalance: bool = True
     bizdate: str = "20240101"  # injected clock (SURVEY.md §7.3.2)
     ctime: str = "2024-01-01 00:00:00"
     spider: str = "zhifang"
@@ -133,26 +146,6 @@ class CrawlConfig:
     # every N rounds so its file count stays bounded (O(1) in rounds AND in
     # table size — compact_small's max_parts tier merge)
     compact_every: int = 8
-    # size-tiered compaction threshold: only manifest entries SMALLER than
-    # this are bin-packed; parts that grow past it become base and are only
-    # re-read by the occasional smallest-first tier merge
-    # (TableIO.compact_small) — compaction I/O stays proportional to
-    # appended bytes amortized, not to the url_seen corpus (O(TB) at 10^10)
-    compact_threshold_bytes: int = 64 << 20
-    # rows per written parquet file for per-round state appends; rounds are
-    # budget-bounded so appends are small — without this every tiny append
-    # would fan out into shuffle.partitions-many files
-    rows_per_file: int = 200_000
-    # children get SPARSE seqs: seq = next_seq + (parent_rank-1)*stride +
-    # child_idx.  Order-isomorphic to the dense (parent_seq, child_idx)
-    # numbering — FIFO/politeness/dedup semantics are identical (only seq
-    # ORDER is ever observed) — but needs NO second offsets action per round.
-    # Must exceed the max children one page can emit.
-    child_stride: int = 1 << 20
-    # below this (upper-bound) frontier size, politeness runs its per-host
-    # window in ONE phase — identical result, one less shuffle; above it the
-    # two-phase salted form bounds the mega-host's group (see politeness.py)
-    salt_min_rows: int = 131072
     # histogram-rank skew fallback: if one (priority, seq-bucket) group of
     # the fused offsets pass exceeds this many rows (a degenerate seq
     # distribution, e.g. one parent emitting ~10^6 children into one stride
@@ -392,8 +385,8 @@ class CrawlEngine:
         return self.catalog.read_or_empty(name, ddl)
 
     def _sized(self, df: DataFrame, approx_rows: int) -> DataFrame:
-        """Coalesce a small per-round write to O(rows/rows_per_file) files."""
-        parts = max(1, min(64, approx_rows // self.cfg.rows_per_file + 1))
+        """Coalesce a small per-round write to O(rows/ROWS_PER_FILE) files."""
+        parts = max(1, min(64, approx_rows // ROWS_PER_FILE + 1))
         return df.coalesce(parts)
 
     def step(self) -> int:
@@ -421,7 +414,7 @@ class CrawlEngine:
 
         tagged = politeness.select_eligible(
             pending, cfg.default_budget, self.budgets, cfg.salt_buckets,
-            two_phase=self._pending_est >= cfg.salt_min_rows,
+            two_phase=self._pending_est >= SALT_MIN_ROWS,
         ).persist()
         eligible = tagged.where("is_eligible").drop("is_eligible")
         deferred = tagged.where("NOT is_eligible").drop("is_eligible")
@@ -465,11 +458,7 @@ class CrawlEngine:
         ranked = self._with_middleware(ranked).persist()
 
         # fetch = join the small per-round batch INTO the big corpus scan
-        use_bc = (
-            cfg.broadcast_eligible
-            if cfg.broadcast_eligible is not None
-            else n_eligible <= cfg.broadcast_max_rows
-        )
+        use_bc = n_eligible <= BROADCAST_MAX_ROWS
         batch = F.broadcast(ranked) if use_bc else ranked
         found = self.corpus.join(batch, "url", "inner").persist()
         missing = ranked.join(found.select("url"), "url", "left_anti")
@@ -505,16 +494,13 @@ class CrawlEngine:
         )
 
         pages = ok.where(F.col("callback").isin(list(self.spec.page_callbacks)))
-        parse_tasks = None  # the fetch join's partitioning decides
-        if cfg.parse_rebalance:
-            # spread hub pages uniformly before the Python parse wave (see
-            # CrawlConfig.parse_rebalance): one task per core, capped by the
-            # round's own size so a 3-page tail round doesn't schedule
-            # near-empty Python tasks
-            parse_tasks = min(
-                self.spark.sparkContext.defaultParallelism, max(1, n_eligible)
-            )
-            pages = pages.repartition(parse_tasks, F.xxhash64("url"))
+        # spread hub pages uniformly before the Python parse wave (see the
+        # module docstring): one task per core, capped by the round's own
+        # size so a 3-page tail round doesn't schedule near-empty Python tasks
+        parse_tasks = min(
+            self.spark.sparkContext.defaultParallelism, max(1, n_eligible)
+        )
+        pages = pages.repartition(parse_tasks, F.xxhash64("url"))
         # the round's only Python stage: parse AND the children's fp/canon
         parsed = parse_pages(pages, self.spec.parse).persist()
 
@@ -605,7 +591,6 @@ class CrawlEngine:
         # sparse seq assignment: parent's round-rank (attached via pmap)
         # spreads children into disjoint, ordered stride blocks — no global
         # dense rank, hence no second driver action in the round
-        stride = cfg.child_stride
         from pyspark.sql import Observation
 
         obs_children = Observation()
@@ -613,7 +598,7 @@ class CrawlEngine:
             admitted.select(
                 (
                     F.lit(self.next_seq)
-                    + (F.col("_prank") - F.lit(self.rank_base) - 1) * F.lit(stride)
+                    + (F.col("_prank") - F.lit(self.rank_base) - 1) * F.lit(CHILD_STRIDE)
                     + F.col("child_idx")
                 ).alias("seq"),
                 "url", "host", "method", "callback",
@@ -683,7 +668,7 @@ class CrawlEngine:
             # proportional to appended bytes, never to the table (round-4
             # verdict #1 — the last O(corpus)-recurring cost in the loop)
             compaction = seen_tb.compact_small(
-                cfg.compact_threshold_bytes, ddl=URL_SEEN_DDL
+                COMPACT_THRESHOLD_BYTES, ddl=URL_SEEN_DDL
             )
             self._seen_appended = 0
         else:
@@ -698,7 +683,7 @@ class CrawlEngine:
                 self.bloom.merge(delta)
                 self._drop_bloom_broadcast()
 
-        self.next_seq += n_eligible * stride
+        self.next_seq += n_eligible * CHILD_STRIDE
         self.rank_base += n_eligible
         lineage = {
             "round": self.round,

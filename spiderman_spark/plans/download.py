@@ -62,7 +62,6 @@ IMAGES_DDL = (
     "image_id string, bytes binary, w int, h int, fmt string, caption string,"
     " phash long, url string, file_path string, verified boolean, round int"
 )
-DL_METRICS_DDL = "round int, host string, n long"
 
 _DL_STATE = ("dl_frontier", "dl_order", "images", "file_meta")
 

@@ -144,7 +144,8 @@ def run_worker(
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         # per-op Python call-site capture (error-message enrichment only) is
         # pure worker-driver overhead in the per-round plan assembly — same
-        # toggle the bench session carries, ~0.4 s/round at crawl shapes
+        # toggle the jobs/ and perfbench sessions carry, ~0.4 s/round at
+        # crawl shapes
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )

@@ -1,20 +1,15 @@
 """TableIO — the Iceberg seam (SURVEY.md §7.0).
 
 The engine's state tables (frontier, url_seen, crawl_order, item tables,
-file_meta, metrics) are written through this thin interface.  Two backends:
-
-- ``iceberg``: used when an Iceberg runtime jar is on the classpath
-  (``spark-submit --packages org.apache.iceberg:...``): ``writeTo(...).append()``
-  snapshot commits give atomic appends and time travel natively.  Not
-  available offline in this sandbox (pyspark's bundled jars lack it).
-- ``parquet+manifest`` (default, in-sandbox): each logical table is a
-  directory of immutable parquet files plus a ``_manifests/`` directory of
-  JSON snapshot files ``v{N}.json`` listing member files.  A snapshot commit =
-  write data files → write ``v{N+1}.json.tmp`` → atomic ``os.rename``.  Readers
-  resolve the latest manifest and read exactly its file list, so appends are
-  atomic, failed writes are invisible, and any older snapshot remains
-  readable — the same append/replace/snapshot-resume semantics the engine
-  needs from Iceberg (north rule: resumable from snapshot checkpoints).
+file_meta, metrics) are written through this thin interface.  Its one
+backend is parquet+manifest: each logical table is a directory of immutable
+parquet files plus a ``_manifests/`` directory of JSON snapshot files
+``v{N}.json`` listing member files.  A snapshot commit = write data files →
+write ``v{N+1}.json.tmp`` → atomic ``os.rename``.  Readers resolve the latest
+manifest and read exactly its file list, so appends are atomic, failed writes
+are invisible, and any older snapshot remains readable.  This mirrors
+Iceberg's append/replace/snapshot semantics, which is what the engine needs
+from a table format (north rule: resumable from snapshot checkpoints).
 
 Reference parity: this replaces the Redis keyspace (`SP/utils/ctrl_redis.py`)
 — RPUSH becomes an append snapshot, key deletion (`SP_JOBS/job.py:75-77`)

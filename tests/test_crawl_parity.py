@@ -101,6 +101,16 @@ def test_unit_scale_parity(spark, workdir, callbacks):
     assert_parity(engine, summary, ref)
 
 
+def test_shuffle_fetch_join_parity(spark, workdir, monkeypatch):
+    """The fetch join's shuffle side (rounds above BROADCAST_MAX_ROWS eligible
+    rows) must give the same crawl as the broadcast side."""
+    from spiderman_spark.plans import crawl
+
+    monkeypatch.setattr(crawl, "BROADCAST_MAX_ROWS", 0)
+    engine, summary, ref = run_pair(spark, workdir, cg.UNIT, DEDUP_CBS, budget=3)
+    assert_parity(engine, summary, ref)
+
+
 def test_items_match_simulator(spark, workdir):
     engine, summary, ref = run_pair(spark, workdir, cg.UNIT, DEDUP_CBS, budget=4)
     for tb in ("zhifang_list", "zhifang_detail", "zhifang_file"):

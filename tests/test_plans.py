@@ -84,35 +84,6 @@ def test_whole_stage_codegen_covers_relational_queries(spark):
     assert "codegen id" in plan  # Spark 4 formatted-mode codegen marker
 
 
-def test_parse_rebalance_modes_are_semantically_neutral(spark, tmp_path):
-    """The BENCH_XXL hub-skew fix (parse_rebalance) must not change results:
-    engine == simulator bit-for-bit with the knob OFF too (the ON mode is
-    covered by the whole parity suite)."""
-    from spiderman_spark import corpusgen as cg
-    from spiderman_spark import simulator as sim
-    from spiderman_spark.plans.crawl import CrawlConfig, CrawlEngine
-
-    cfg = CrawlConfig(
-        callbacks={"list": True, "detail": True}, parse_rebalance=False
-    )
-    assert CrawlConfig().parse_rebalance is True  # default ON
-    engine = CrawlEngine(
-        spark, cg.build_crawl_corpus(spark, cg.UNIT), str(tmp_path), cfg
-    )
-    seeds = sim.make_seeds(cg.UNIT)
-    engine.seed(seeds)
-    engine.run()
-    ref = sim.simulate_crawl(
-        sim.corpus_as_dict(cg.UNIT), seeds,
-        callbacks={"list": True, "detail": True, "file": False},
-    )
-    got = [
-        (r["rank"], r["round"], r["url"], r["host"], r["attempt"])
-        for r in engine.crawl_order().orderBy("rank").collect()
-    ]
-    assert got == ref.crawl_order
-
-
 def _exchange_blocks(plan: str) -> list[str]:
     """Split a formatted plan's detail section into per-node blocks and
     return those that are shuffle Exchanges."""
