@@ -187,11 +187,11 @@ def average_phash(px: np.ndarray) -> int:
     # block-mean resize to 8x8 via index binning (works for any h, w >= 8)
     yi = (np.arange(h) * 8) // h
     xi = (np.arange(w) * 8) // w
-    small = np.zeros((8, 8))
-    counts = np.zeros((8, 8))
-    np.add.at(small, (yi[:, None].repeat(w, 1), xi[None, :].repeat(h, 0)), gray)
-    np.add.at(counts, (yi[:, None].repeat(w, 1), xi[None, :].repeat(h, 0)), 1.0)
-    small /= counts
+    # per-cell sums in row-major pixel order (the same order np.add.at
+    # accumulates in, so the float sums are bit-identical to it)
+    cell = (yi[:, None] * 8 + xi[None, :]).ravel()
+    small = np.bincount(cell, weights=gray.ravel(), minlength=64).reshape(8, 8)
+    small /= np.bincount(cell, minlength=64).reshape(8, 8)
     bits = (small > small.mean()).flatten()
     val = 0
     for b in bits:

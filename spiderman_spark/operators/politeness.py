@@ -30,6 +30,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_SALT_BUCKETS = 16
+# below this (upper-bound) frontier size, callers run the per-host window
+# in ONE phase (``two_phase=False``) — identical result, one less shuffle;
+# above it the two-phase salted form bounds the mega-host's group
+SALT_MIN_ROWS = 131072
 
 
 def select_eligible(

@@ -74,6 +74,7 @@ from ..operators.bloom import (
     publish_bloom,
 )
 from ..operators.parse import items_of, parse_pages, requests_of
+from ..operators.politeness import SALT_MIN_ROWS
 from ..spiderspec import ZHIFANG, SpiderSpec
 from ..tableio import Catalog
 
@@ -103,10 +104,6 @@ STATE_TABLES = ("frontier", "url_seen", "crawl_order", "items_raw", "failed")
 # many rows (a 10^6-row broadcast is serial driver work and executor memory;
 # past that the corpus-side shuffle parallelizes better)
 BROADCAST_MAX_ROWS = 300_000
-# below this (upper-bound) frontier size, politeness runs its per-host
-# window in ONE phase — identical result, one less shuffle; above it the
-# two-phase salted form bounds the mega-host's group (see politeness.py)
-SALT_MIN_ROWS = 131072
 # children get SPARSE seqs: seq = next_seq + (parent_rank-1)*stride +
 # child_idx.  Order-isomorphic to the dense (parent_seq, child_idx)
 # numbering — FIFO/politeness/dedup semantics are identical (only seq

@@ -20,9 +20,13 @@ Spark mapping (SURVEY.md §3.3, S5/S16/J4/P4/P8):
                  phash structural check (input_hint per-row invariant; the
                  PSNR-vs-ground-truth and caption-equality asserts live in
                  tests, where ground truth is available);
-- update       → MERGE by url into ``file_meta`` (read-modify-write with an
-                 atomic manifest swap on the parquet backend — Iceberg MERGE
-                 INTO upstream);
+- update       → MERGE by url into ``file_meta``: a hash-bucketed table with
+                 one bucket per ``ROWS_PER_BUCKET`` rows (counted at
+                 ``make_job``), one parquet file per bucket.  A round
+                 rewrites only the buckets holding a url of its batch —
+                 known at the head, before any write — so the MERGE is one
+                 read-join-write job running beside the other writes, with
+                 an atomic manifest swap (Iceberg MERGE INTO upstream);
 - bytes        → appended to the ``images`` table with exactly the input_hint
                  shape (image_id, bytes, w, h, fmt, caption, phash) + lineage.
 
@@ -40,6 +44,7 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -47,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..corpusgen import RETRY_HTTP_CODES
 from ..operators import politeness, ranks
+from ..operators.politeness import SALT_MIN_ROWS
 from ..tableio import Catalog
 
 STATUS_PENDING = "未下载"
@@ -64,6 +70,12 @@ IMAGES_DDL = (
 )
 
 _DL_STATE = ("dl_frontier", "dl_order", "images", "file_meta")
+
+# file_meta rows per hash bucket.  A row is ~50-150 B in parquet (54 B for
+# the generated corpora's rows), so a bucket is one ~100-300 MB file: big
+# enough to read efficiently, small enough that a round's MERGE rewrites
+# O(touched buckets) of the table
+ROWS_PER_BUCKET = 1 << 21
 
 
 @dataclass
@@ -84,11 +96,6 @@ class DownloadConfig:
     # rest path stays entirely JVM-side.  Unverified rows carry verified=NULL
     # ("not checked"), never a claimed True.
     verify_fraction: float = 1.0
-    # file_meta hash-bucket count: the per-round status MERGE rewrites only
-    # the buckets its updates hash into (O(updates), not O(table) — at a
-    # 100 TB file_meta the old full-table rewrite IS the job).  Size so one
-    # bucket ≈ a few hundred MB at target scale.
-    meta_buckets: int = 32
 
 
 def _decode_verify_udf():
@@ -146,6 +153,9 @@ class ImageDownloader:
         self.budgets = budgets
         self.round = 0
         self.rank_base = 0
+        # exclusive bound on the frontier's seqs, and so on its size: the
+        # frontier only shrinks after make_job (retries keep their seq)
+        self.seq_hi = 0
         self._ckpt_path = os.path.join(workdir, "dl_checkpoint.json")
 
     # ------------------------------------------------------------ job scan
@@ -156,12 +166,12 @@ class ImageDownloader:
         cfg = self.cfg
         for t in ("dl_frontier", "dl_order"):
             self.catalog.table(t).replace_empty()
-        if not cfg.overwrite:
-            self.catalog.table("images")  # keep prior images (skip-if-exists)
-        else:
-            self.catalog.table("images").replace_empty()
+        images = self.catalog.table("images")
+        if cfg.overwrite:
+            images.replace_empty()
+        n_buckets = max(1, -(-file_meta.count() // ROWS_PER_BUCKET))
         self.catalog.table("file_meta").replace_bucketed(
-            file_meta, "file_url", cfg.meta_buckets
+            file_meta, "file_url", n_buckets
         )
 
         todo = file_meta.where(
@@ -172,16 +182,18 @@ class ImageDownloader:
         w_url = Window.partitionBy("file_url").orderBy("keyid")
         todo = todo.withColumn("_rn", F.row_number().over(w_url)).where("_rn = 1")
 
-        if not cfg.overwrite:
-            have = self.catalog.read_or_empty("images", IMAGES_DDL).select(
-                F.col("url").alias("file_url")
-            )
+        # skip-if-exists: only a url already in `images` can be skipped, so
+        # a fresh (or overwrite) job has nothing to skip and nothing to merge
+        have = images.read(ddl=IMAGES_DDL)
+        if have is not None:
+            have = have.select(F.col("url").alias("file_url"))
             skipped = todo.join(have, "file_url", "left_semi")
             todo = todo.join(have, "file_url", "left_anti")
             self._merge_status(
                 skipped.select(F.col("file_url").alias("url")).withColumn(
                     "new_status", F.lit(STATUS_OK)
-                ).withColumn("new_path", self._path_col(F.col("url")))
+                ).withColumn("new_path", self._path_col(F.col("url"))),
+                self.catalog.table("file_meta").buckets_of(skipped, "file_url"),
             )
 
         # deterministic seq = global rank by keyid, two-phase (no
@@ -205,7 +217,7 @@ class ImageDownloader:
         )
         self.catalog.table("dl_frontier").replace(seeds)
         tpart.unpersist()
-        self.round, self.rank_base = 0, 0
+        self.round, self.rank_base, self.seq_hi = 0, 0, n_seeds
         self._checkpoint()
         return n_seeds
 
@@ -224,6 +236,7 @@ class ImageDownloader:
         state = {
             "round": self.round,
             "rank_base": self.rank_base,
+            "seq_hi": self.seq_hi,
             "versions": {t: self.catalog.table(t).current_version() for t in _DL_STATE},
             "lineage": lineage or {},
         }
@@ -243,51 +256,78 @@ class ImageDownloader:
                 tb.rollback_to(v)
         self.round = state["round"]
         self.rank_base = state["rank_base"]
+        self.seq_hi = state["seq_hi"]
         return True
 
     def step(self) -> int:
+        """Run one download round; returns the number of files fetched
+        (0 ⇒ done).  Same head as ``CrawlEngine.step``: ONE small action,
+        the fused politeness + histogram-offsets pass, yields the round's
+        count and its rank offsets; then the four writes (order append,
+        images append, status MERGE, frontier replace) run concurrently."""
         cfg = self.cfg
         pending = self.catalog.read_or_empty("dl_frontier", DL_FRONTIER_DDL)
-        nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         tagged = politeness.select_eligible(
-            pending, cfg.default_budget, self.budgets, cfg.salt_buckets
+            pending, cfg.default_budget, self.budgets, cfg.salt_buckets,
+            two_phase=self.seq_hi >= SALT_MIN_ROWS,
         ).persist()
         eligible = tagged.where("is_eligible").drop("is_eligible")
         deferred = tagged.where("NOT is_eligible").drop("is_eligible")
 
-        epart = ranks.range_prepare(eligible, ["seq"], nparts).persist()
-        eoffs, n_eligible = ranks.collect_offsets(epart)  # doubles as count()
+        # fetch order = seq (FIFO).  Frontier seqs are distinct and below
+        # seq_hi, so a (0, seq >> shift) group holds at most seq_hi / 2^15
+        # rows: no skewed rank window, no range-partitioned fallback
+        shift = max(0, int(self.seq_hi - 1).bit_length() - 16)
+        eligible = eligible.withColumn("_np", F.lit(0))
+        hoffs, n_eligible, _ = ranks.hist_offsets(eligible, "_np", "seq", shift)
         if n_eligible == 0:
-            epart.unpersist()
             tagged.unpersist()
             return 0
         self.round += 1
 
-        ranked = ranks.with_rank(
-            epart, ["seq"], "rank", eoffs, base=self.rank_base
-        ).drop("_pid")
+        # persisted: the status join, the order append and the status
+        # updates all read the ranked batch
+        ranked = (
+            ranks.with_hist_rank(
+                eligible, "_np", "seq", shift, hoffs, "rank", base=self.rank_base
+            )
+            .drop("_np")
+            .persist()
+        )
+        # the MERGE's buckets, before any write: every status update is for
+        # a url of this batch
+        touched = self.catalog.table("file_meta").buckets_of(eligible, "url")
         batch = F.broadcast(ranked)
         with_status = self.status_corpus.join(batch, "url", "inner").persist()
-        missing = ranked.join(with_status.select("url"), "url", "left_anti")
 
+        retry = F.col("http_status").isin(list(RETRY_HTTP_CODES)) & (
+            F.col("attempt") < cfg.retry_times
+        )
         ok = with_status.where(F.col("http_status") == 200)
-        bad = with_status.where(F.col("http_status") != 200)
-        retries = (
-            bad.where(
-                F.col("http_status").isin(list(RETRY_HTTP_CODES))
-                & (F.col("attempt") < cfg.retry_times)
+        retries = with_status.where(retry).select(
+            "seq", "url", "host", "file_type", "file_name",
+            (F.col("attempt") + 1).alias("attempt"),
+        )
+        # file_meta status by url: fetched → OK, requeued → unchanged (no
+        # update row), otherwise — no retry left, or the url is absent from
+        # the status corpus (NULL http_status) — FAIL
+        fetched_ok = F.col("http_status") == 200
+        updates = (
+            ranked.select("url", "attempt")
+            .join(
+                F.broadcast(with_status.select("url", "http_status")), "url", "left"
             )
+            .where(~F.coalesce(retry, F.lit(False)))
             .select(
-                "seq", "url", "host", "file_type", "file_name",
-                (F.col("attempt") + 1).alias("attempt"),
+                "url",
+                F.when(fetched_ok, STATUS_OK)
+                .otherwise(STATUS_FAIL)
+                .alias("new_status"),
+                F.when(fetched_ok, self._path_col(F.col("url")))
+                .otherwise("")
+                .alias("new_path"),
             )
         )
-        exhausted = bad.where(
-            ~(
-                F.col("http_status").isin(list(RETRY_HTTP_CODES))
-                & (F.col("attempt") < cfg.retry_times)
-            )
-        ).select("url").unionByName(missing.select("url"))
 
         # fetch payload: join the ok batch INTO the image-corpus scan
         fetched = self.image_corpus.join(
@@ -318,23 +358,11 @@ class ImageDownloader:
         # small state appends coalesce to few files; the images append keeps
         # its natural partitioning (wide binary rows, parallel write)
         n_files = max(1, min(64, n_eligible // 200_000 + 1))
-        updates = (
-            ok.select("url")
-            .withColumn("new_status", F.lit(STATUS_OK))
-            .withColumn("new_path", self._path_col(F.col("url")))
-            .unionByName(
-                exhausted.withColumn("new_status", F.lit(STATUS_FAIL)).withColumn(
-                    "new_path", F.lit("")
-                )
-            )
-        )
         # four independent tables → four concurrent write jobs
-        from concurrent.futures import ThreadPoolExecutor
-
         writes = [
             lambda: self.catalog.table("dl_order").append(order_rows.coalesce(n_files)),
             lambda: self.catalog.table("images").append(images),
-            lambda: self._merge_status(updates),
+            lambda: self._merge_status(updates, touched),
             lambda: self.catalog.table("dl_frontier").replace(
                 deferred.unionByName(retries).coalesce(n_files)
             ),
@@ -345,7 +373,7 @@ class ImageDownloader:
         self.rank_base += n_eligible
         self._checkpoint(lineage={"round": self.round, "n_eligible": n_eligible})
         with_status.unpersist()
-        epart.unpersist()
+        ranked.unpersist()
         tagged.unpersist()
         return n_eligible
 
@@ -360,40 +388,31 @@ class ImageDownloader:
 
     # ------------------------------------------------------------ merge
 
-    def _merge_status(self, updates: DataFrame) -> None:
+    def _merge_status(self, updates: DataFrame, touched: list[int]) -> None:
         """J4: MERGE INTO file_meta USING updates ON file_url.
 
-        Bucket-granular copy-on-write: updates hash to their buckets, ONLY
-        those buckets are read back, merged, and rewritten; every untouched
-        bucket's immutable files carry into the new snapshot verbatim
-        (Iceberg MERGE INTO file granularity — upstream `download.py:148-158`
-        batch-UPDATEs by keyid, which a 100 TB-scale engine cannot do as a
-        full-table rewrite)."""
+        Bucket-granular copy-on-write: ONLY the ``touched`` buckets (the
+        caller's superset of the buckets ``updates`` hash into) are read
+        back, merged, and rewritten; every untouched bucket's immutable
+        files carry into the new snapshot verbatim (Iceberg MERGE INTO file
+        granularity — upstream `download.py:148-158` batch-UPDATEs by keyid,
+        which a 100 TB-scale engine cannot do as a full-table rewrite).
+        One write job: no action runs before it."""
         tb = self.catalog.table("file_meta")
-        if not tb.exists():
-            return
-        n_buckets = tb.props().get("n_buckets", self.cfg.meta_buckets)
-        upd = (
-            updates.withColumnRenamed("url", "file_url")
-            .withColumn("_b", F.pmod(F.xxhash64("file_url"), F.lit(n_buckets)))
-            .persist()
-        )
-        touched = sorted(r["_b"] for r in upd.select("_b").distinct().collect())
-        if not touched:
-            upd.unpersist()
-            return
         fm = tb.read_buckets(touched)
-        if fm is None:  # updates reference urls the table never contained
-            upd.unpersist()
+        if fm is None:  # no table, or the buckets hold no rows
             return
         merged = (
-            fm.join(F.broadcast(upd.drop("_b")), "file_url", "left")
+            fm.join(
+                F.broadcast(updates.withColumnRenamed("url", "file_url")),
+                "file_url",
+                "left",
+            )
             .withColumn("status", F.coalesce("new_status", "status"))
             .withColumn("file_path", F.coalesce("new_path", "file_path"))
             .drop("new_status", "new_path")
         )
         tb.merge_buckets(merged.select(*fm.columns), touched)
-        upd.unpersist()
 
     # ------------------------------------------------------------ outputs
 

@@ -25,6 +25,13 @@ import time
 import uuid
 
 
+def _bucket_expr(col: str, n_buckets: int):
+    """The bucket id of ``col`` in a table of ``n_buckets`` hash buckets."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets))
+
+
 class ParquetManifestTable:
     """One logical table: immutable parquet part-dirs + JSON snapshot manifests."""
 
@@ -228,10 +235,16 @@ class ParquetManifestTable:
     # -------------------------------------------------- bucketed snapshots
     #
     # Hash-bucketed layout for MERGE-heavy tables (file_meta): each snapshot
-    # entry is one bucket directory 'data-XXX/_b=i', so a merge touching few
-    # buckets rewrites only those and carries every other entry over
-    # unchanged — O(touched buckets), not O(table), per merge (Iceberg
-    # MERGE INTO's copy-on-write file granularity, on the parquet backend).
+    # entry is one bucket directory 'data-XXX/_b=i' holding ONE parquet file
+    # (rows are clustered by bucket before the partitioned write), so a
+    # merge touching few buckets rewrites only those and carries every other
+    # entry over unchanged — O(touched buckets), not O(table), per merge
+    # (Iceberg MERGE INTO's copy-on-write file granularity, on the parquet
+    # backend).  Files, not rows, are the fixed cost of a small write: each
+    # file, .crc sidecar and directory is a filesystem round trip (a forked
+    # chmod per file without Hadoop's native library).  The table's props
+    # record the bucket column, the bucket count and the data schema, so
+    # merges hash identically and reads skip schema inference.
 
     @staticmethod
     def _bucket_of(entry: str) -> int | None:
@@ -239,11 +252,10 @@ class ParquetManifestTable:
         return int(tail[len("_b="):]) if tail.startswith("_b=") else None
 
     def _write_bucketed(self, df, bucket_col: str, n_buckets: int) -> list[str]:
-        from pyspark.sql import functions as F
-
         part = f"data-{uuid.uuid4().hex}"
         (
-            df.withColumn("_b", F.pmod(F.xxhash64(bucket_col), F.lit(n_buckets)))
+            df.withColumn("_b", _bucket_expr(bucket_col, n_buckets))
+            .repartition("_b")  # one task per bucket → one file per bucket
             .write.partitionBy("_b")
             .mode("overwrite")
             .parquet(os.path.join(self.root, part))
@@ -259,19 +271,35 @@ class ParquetManifestTable:
         entries = self._write_bucketed(df, bucket_col, n_buckets)
         return self._commit(
             entries,
-            {**(props or {}), "bucket_col": bucket_col, "n_buckets": n_buckets},
+            {
+                **(props or {}),
+                "bucket_col": bucket_col,
+                "n_buckets": n_buckets,
+                "schema": df.schema.toDDL(),
+            },
         )
 
     def bucket_entries(self, buckets) -> list[str]:
         want = set(buckets)
         return [f for f in self._manifest()["files"] if self._bucket_of(f) in want]
 
+    def buckets_of(self, df, col: str) -> list[int]:
+        """The buckets that ``df``'s values of ``col`` hash into: the ones a
+        merge keyed by them can touch.  One small action, none when the
+        table has a single bucket."""
+        n_buckets = self.props().get("n_buckets", 1)
+        if n_buckets == 1:
+            return [0]
+        rows = df.select(_bucket_expr(col, n_buckets)).distinct().collect()
+        return [r[0] for r in rows]
+
     def read_buckets(self, buckets):
-        """Read only the given buckets' files (None if they hold no data)."""
+        """Read only the given buckets' files (None if they hold no data),
+        with the schema recorded at ``replace_bucketed``."""
         entries = self.bucket_entries(buckets)
         if not entries:
             return None
-        return self.spark.read.parquet(
+        return self.spark.read.schema(self.props()["schema"]).parquet(
             *[os.path.join(self.root, f) for f in entries]
         )
 

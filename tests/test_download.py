@@ -9,6 +9,7 @@ import pytest
 from spiderman_spark import corpusgen as cg
 from spiderman_spark import imagecodec as ic
 from spiderman_spark import simulator as sim
+from spiderman_spark.plans import download
 from spiderman_spark.plans.crawl import CrawlConfig, CrawlEngine
 from spiderman_spark.plans.download import (
     STATUS_FAIL,
@@ -175,13 +176,17 @@ def test_download_resume_mid_run(spark, workdir, crawled):
     assert got_fm == want_fm
 
 
-def test_bucketed_merge_rewrites_only_touched_buckets(spark, workdir, crawled):
+def test_bucketed_merge_rewrites_only_touched_buckets(
+    spark, workdir, crawled, monkeypatch
+):
     """VERDICT fix: the per-round status MERGE must be O(touched buckets),
     not a full-table rewrite — untouched buckets' immutable files carry into
-    the new snapshot verbatim (same paths, same bytes)."""
+    the new snapshot verbatim (same paths, same bytes).  A UNIT file_meta
+    fits one bucket at the default size, so buckets are shrunk to 2 rows."""
     import hashlib
     import os
 
+    monkeypatch.setattr(download, "ROWS_PER_BUCKET", 2)
     dl = make_downloader(spark, workdir, budget=2)
     dl.make_job(crawled.items("zhifang_file"))
     tb = dl.catalog.table("file_meta")
@@ -215,3 +220,43 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, workdir, crawled):
     assert len(untouched) > 0
     # and the merged table still reads back with every row accounted for
     assert dl.file_meta().count() == crawled.items("zhifang_file").count()
+
+
+def test_make_job_sizes_buckets_to_rows(
+    spark, workdir, tmp_path, crawled, monkeypatch
+):
+    """file_meta gets ceil(rows / ROWS_PER_BUCKET) buckets (at least one),
+    each one parquet file, recorded in the table props; a run over several
+    buckets (each round's MERGE rewriting only its batch's buckets) ends in
+    the same file_meta as over one."""
+    import math
+    import os
+
+    rows = crawled.items("zhifang_file")
+    n = rows.count()
+
+    def run_with_buckets(wd):
+        dl = make_downloader(spark, wd)
+        dl.make_job(rows)
+        tb = dl.catalog.table("file_meta")
+        entries = tb._manifest()["files"]
+        for e in entries:  # one file per bucket
+            files = os.listdir(os.path.join(tb.root, e))
+            assert len([f for f in files if f.endswith(".parquet")]) == 1, e
+        dl.run()
+        final = sorted(
+            (r["file_url"], r["keyid"], r["status"], r["file_path"])
+            for r in dl.file_meta().collect()
+        )
+        return tb.props()["n_buckets"], len(entries), final
+
+    n_buckets, n_entries, one_bucket = run_with_buckets(workdir)
+    assert (n_buckets, n_entries) == (1, 1)
+    monkeypatch.setattr(download, "ROWS_PER_BUCKET", 7)
+    want = math.ceil(n / 7)
+    assert want > 1
+    n_buckets, n_entries, many_buckets = run_with_buckets(str(tmp_path))
+    assert n_buckets == want
+    assert 1 < n_entries <= want  # a bucket no url hashes to has no entry
+    assert many_buckets == one_bucket
+    assert any(st == STATUS_OK for _, _, st, _ in one_bucket)

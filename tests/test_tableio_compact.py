@@ -117,6 +117,40 @@ def test_compact_small_refuses_bucketed(spark, tmp_path):
         tb.compact_small(1 << 20)
 
 
+def test_bucketed_writes_one_file_per_bucket(spark, tmp_path):
+    """replace_bucketed and merge_buckets over a 4-partition frame write one
+    parquet file per bucket entry, not one per (task, bucket)."""
+    import os
+
+    cat = Catalog(spark, str(tmp_path))
+    tb = cat.table("t")
+    df = spark.range(400).select(
+        F.col("id").cast("string").alias("k"), F.lit("a").alias("v")
+    ).repartition(4)
+    assert df.rdd.getNumPartitions() == 4
+
+    def files_per_entry():
+        return {
+            e: len([
+                f for f in os.listdir(os.path.join(tb.root, e))
+                if f.endswith(".parquet")
+            ])
+            for e in tb._manifest()["files"]
+        }
+
+    tb.replace_bucketed(df, "k", 3)
+    assert len(files_per_entry()) == 3
+    assert set(files_per_entry().values()) == {1}
+    touched = [0, 2]
+    merged = tb.read_buckets(touched).withColumn("v", F.lit("b")).repartition(4)
+    tb.merge_buckets(merged, touched)
+    counts = files_per_entry()
+    assert len(counts) == 3 and set(counts.values()) == {1}
+    got = tb.read().groupBy("v").count().collect()
+    assert sum(r["count"] for r in got) == 400
+    assert {r["v"] for r in got} == {"a", "b"}
+
+
 def test_append_drop_empty_commits_nothing(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path))
     tb = cat.table("t")
