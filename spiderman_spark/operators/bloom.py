@@ -209,10 +209,3 @@ def maybe_seen_from_broadcast(bc):
     # lambda-style registration: the module uses `from __future__ import
     # annotations`, which stringifies hints and breaks signature inference
     return F.pandas_udf(_maybe_seen, BooleanType())
-
-
-def maybe_seen_udf(spark, bloom: BloomSet):
-    """One-shot convenience: broadcast + probe (tests / ad-hoc use).  Engines
-    that loop over rounds should use publish_bloom + maybe_seen_from_broadcast
-    and manage the broadcast lifecycle explicitly."""
-    return maybe_seen_from_broadcast(publish_bloom(spark, bloom))

@@ -114,21 +114,6 @@ def minhash_value(gram_col, i: int, hash_family: str = "md5"):
     return F.substring(F.md5(F.concat(F.lit(f"{i}:"), gram_col)), 1, 16)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 2, k: int = 32,
-    hash_family: str = "md5",
-) -> DataFrame:
-    """(id, sig array): k-permutation MinHash over word n-grams
-    (array<string> for the md5 family, array<long> for xxhash64).
-
-    All JVM built-ins (hash/array_min inside whole-stage codegen), no Python
-    in the path."""
-    sh = df.select(
-        F.col(id_col).alias("did"), word_ngrams(F.col(text_col), n).alias("grams")
-    ).where(F.size("grams") > 0)
-    return sh.select("did", _sig_expr(k, hash_family).alias("sig"))
-
-
 LONG_MAX = (1 << 63) - 1
 
 

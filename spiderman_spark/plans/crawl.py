@@ -31,13 +31,12 @@ Scale posture (the parts that matter at a 10^10-row frontier):
   round, crashes roll back to the last checkpoint, and resume is a manifest
   read (north rule: resumable from snapshot checkpoints with lineage+metrics).
 
-Global rank assignment and child seq assignment use the two-phase
-range-partitioned rank (operators/ranks.py) — no single-partition Exchange in
-the round, so a 10^6–10^8-row round (the north rule's frontier scale) never
-funnels through one task.  The offset-collect jobs double as the round's row
-counts, and the five per-round state writes run concurrently, keeping the
-fixed driver barrier to ~2 small actions + max(write) instead of
-count + 5 sequential writes.
+The round's skeleton (plans/rounds.py, shared with ``ImageDownloader``):
+ONE small head action sizes and ranks the batch with no single-partition
+Exchange, children take sparse seqs from their parent's rank, and the five
+state writes plus the Bloom delta build run as one concurrent wave — the
+fixed driver barrier is ~1 small action + max(write), not count + 5
+sequential writes.
 
 Python cost: a round runs exactly ONE Python stage — ``parse_pages``, which
 also computes each child's ``fp``/``canon`` — with at most one task per core.
@@ -59,13 +58,15 @@ from __future__ import annotations
 
 import json
 import os
+import time
+import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..corpusgen import RETRY_HTTP_CODES
-from ..operators import politeness, ranks
+from ..operators import ranks
 from ..operators.bloom import (
     BloomConfig,
     BloomSet,
@@ -74,9 +75,8 @@ from ..operators.bloom import (
     publish_bloom,
 )
 from ..operators.parse import items_of, parse_pages, requests_of
-from ..operators.politeness import SALT_MIN_ROWS
 from ..spiderspec import ZHIFANG, SpiderSpec
-from ..tableio import Catalog
+from .rounds import FrontierRounds
 
 FRONTIER_DDL = (
     "seq long, url string, host string, method string, callback string,"
@@ -96,10 +96,6 @@ ITEMS_RAW_DDL = (
 )
 ITEMS_RAW_COLS = [c.split()[0] for c in ITEMS_RAW_DDL.split(",")]
 
-# per-host fetch metrics are DERIVED from crawl_order (same rows, grouped) —
-# one less write per round and one less table to keep consistent
-STATE_TABLES = ("frontier", "url_seen", "crawl_order", "items_raw", "failed")
-
 # fetch-join strategy: broadcast the round batch while it has at most this
 # many rows (a 10^6-row broadcast is serial driver work and executor memory;
 # past that the corpus-side shuffle parallelizes better)
@@ -110,10 +106,6 @@ BROADCAST_MAX_ROWS = 300_000
 # ORDER is ever observed) — but needs NO second offsets action per round.
 # Must exceed the max children one page can emit.
 CHILD_STRIDE = 1 << 20
-# rows per written parquet file for per-round state appends; rounds are
-# budget-bounded so appends are small — without this every tiny append
-# would fan out into shuffle.partitions-many files
-ROWS_PER_FILE = 200_000
 # size-tiered url_seen compaction threshold: only manifest entries SMALLER
 # than this are bin-packed; parts that grow past it become base and are
 # only re-read by the occasional smallest-first tier merge
@@ -143,12 +135,6 @@ class CrawlConfig:
     # every N rounds so its file count stays bounded (O(1) in rounds AND in
     # table size — compact_small's max_parts tier merge)
     compact_every: int = 8
-    # histogram-rank skew fallback: if one (priority, seq-bucket) group of
-    # the fused offsets pass exceeds this many rows (a degenerate seq
-    # distribution, e.g. one parent emitting ~10^6 children into one stride
-    # block), pay the extra range-partitioning job instead of handing one
-    # window task the whole round
-    hist_max_group: int = 131072
     # U3 middleware (`SP/middlewares/SPMiddleWare.py:40-133`; headers/cookies
     # Redis keys `SP_JOBS/job.py:42-45`): UA/cookie rotation + fixed headers
     # stamped as columns on the eligible batch before the fetch join.
@@ -160,7 +146,17 @@ class CrawlConfig:
     default_headers: dict | None = None
 
 
-class CrawlEngine:
+class CrawlEngine(FrontierRounds):
+    # per-host fetch metrics are DERIVED from crawl_order (same rows,
+    # grouped) — one less write per round, one less table to keep consistent
+    STATE_TABLES = ("frontier", "url_seen", "crawl_order", "items_raw", "failed")
+    # _pending_est bounds the frontier's size (it picks one politeness
+    # phase and sizes the frontier write); _seen_appended gates compaction
+    STATE_ATTRS = ("round", "next_seq", "rank_base", "_pending_est", "_seen_appended")
+    CHECKPOINT = "checkpoint.json"
+    ORDER_TABLE = "crawl_order"
+    ORDER_DDL = CRAWL_ORDER_DDL
+
     def __init__(
         self,
         spark: SparkSession,
@@ -174,19 +170,14 @@ class CrawlEngine:
         fleet_dir: str | None = None,
         host_map: dict | None = None,
     ):
-        self.spark = spark
+        super().__init__(spark, workdir, config or CrawlConfig(), budgets)
         self.spec = spec or ZHIFANG
-        self.cfg = config or CrawlConfig()
         self.corpus = corpus.select("url", "http_status", "body", "body_size")
-        self.catalog = Catalog(spark, workdir)
-        self.budgets = budgets
         # T4 robots opt-in (reference default OFF, `SP/settings.py:118-119`):
         # small (host, disallow_prefix) rules table, broadcast into child
         # admission; blocked children are recorded as failed('robots')
         self.robots_rules = robots_rules
-        self.round = 0
         self.next_seq = 0
-        self.rank_base = 0
         self.bloom = BloomSet(self.cfg.bloom) if self.cfg.bloom else None
         # one live broadcast of the bitmaps; republished (and the old handle
         # destroyed) only on merge — constant executor memory over any number
@@ -194,7 +185,6 @@ class CrawlEngine:
         self._bloom_bc = None
         self.bloom_broadcasts_dropped = 0
         self._pending_est = 0  # running upper bound on frontier size
-        self._ckpt_path = os.path.join(workdir, "checkpoint.json")
         # fleet mode (plans/fleet.py): this engine owns hosts with
         # pmod(xxhash64(host), W) == w; children on foreign hosts are exported
         # to the owning worker's handoff inbox instead of admitted locally
@@ -205,7 +195,6 @@ class CrawlEngine:
         self.handoff_consumed = 0  # handoff drops ingested
         self._seen_appended = 0  # url_seen rows since last compaction
         self._ingested: set[str] = set()
-        self._round_caches: list = []  # per-round persisted frames to release
 
     def _drop_bloom_broadcast(self) -> None:
         # unpersist, NOT destroy: DataFrames whose lineage embeds the probe
@@ -218,12 +207,13 @@ class CrawlEngine:
             self.bloom_broadcasts_dropped += 1
             self._bloom_bc = None
 
-    def _bloom_probe(self):
-        """Current-round membership probe column fn, reusing the live
-        broadcast (published lazily on first use)."""
-        if self._bloom_bc is None:
-            self._bloom_bc = publish_bloom(self.spark, self.bloom)
-        return maybe_seen_from_broadcast(self._bloom_bc)
+    def _merge_bloom(self, delta: BloomSet) -> None:
+        """Merge a delta once every job that probed the live broadcast is
+        done; the merged bitmap republishes lazily.  An empty delta keeps
+        the broadcast."""
+        if delta.bitmaps.any():
+            self.bloom.merge(delta)
+            self._drop_bloom_broadcast()
 
     # ------------------------------------------------------------ lifecycle
 
@@ -253,25 +243,9 @@ class CrawlEngine:
             )
             for i, s in enumerate(seeds)
         ]
-        if not preserve_state:
-            for t in STATE_TABLES:
-                self.catalog.table(t).replace_empty()
-        self.catalog.table("frontier").replace(
-            self.spark.createDataFrame(rows, FRONTIER_DDL)
+        self._reset_frontier(
+            self.spark.createDataFrame(rows, FRONTIER_DDL), len(rows), preserve_state
         )
-        if preserve_state:
-            self.next_seq += len(rows)
-            self._pending_est = len(rows)
-            # kept url_seen may carry un-compacted appends from before
-            self._seen_appended = max(1, self._seen_appended)
-        else:
-            self.round, self.next_seq, self.rank_base = 0, len(rows), 0
-            self._pending_est = len(rows)
-            self._seen_appended = 0
-            if self.bloom is not None:
-                self._drop_bloom_broadcast()
-                self.bloom = BloomSet(self.cfg.bloom)
-        self._checkpoint()
 
     def seed_from_df(
         self,
@@ -291,11 +265,7 @@ class CrawlEngine:
         ``seeds`` needs ``url`` plus optionally ``method``/``callback``/
         ``req_body``/``meta_json`` (defaulted) and its ``order_by`` columns.
         Returns the number of seeds enqueued."""
-        cfg = self.cfg
         base = self.next_seq if preserve_state else 0
-        if not preserve_state:
-            for t in STATE_TABLES:
-                self.catalog.table(t).replace_empty()
         defaults = {
             "method": F.lit("GET"),
             "callback": F.lit("list"),
@@ -321,134 +291,62 @@ class CrawlEngine:
                 F.lit(0).alias("attempt"), F.col("priority"),
             )
         )
+        self._reset_frontier(rows, n, preserve_state)
+        spart.unpersist()
+        return n
+
+    def _reset_frontier(self, rows: DataFrame, n: int, preserve_state: bool) -> None:
+        """Write the ``n`` seed ``rows`` as the whole frontier, then
+        checkpoint.  A fresh crawl first empties every state table and
+        restarts the counters and the Bloom filter; a patch crawl keeps them
+        and moves ``next_seq`` past the seeds."""
+        if not preserve_state:
+            for t in self.STATE_TABLES:
+                self.catalog.table(t).replace_empty()
+        self.catalog.table("frontier").replace(self._sized(rows, n))
         if preserve_state:
-            self.catalog.table("frontier").replace(self._sized(rows, n))
             self.next_seq += n
-            self._pending_est = n
+            # kept url_seen may carry un-compacted appends from before
             self._seen_appended = max(1, self._seen_appended)
         else:
-            self.catalog.table("frontier").replace(self._sized(rows, n))
             self.round, self.next_seq, self.rank_base = 0, n, 0
-            self._pending_est = n
             self._seen_appended = 0
             if self.bloom is not None:
                 self._drop_bloom_broadcast()
-                self.bloom = BloomSet(cfg.bloom)
-        spart.unpersist()
+                self.bloom = BloomSet(self.cfg.bloom)
+        self._pending_est = n
         self._checkpoint()
-        return n
-
-    def _checkpoint(self, lineage: dict | None = None) -> None:
-        state = {
-            "round": self.round,
-            "next_seq": self.next_seq,
-            "rank_base": self.rank_base,
-            "versions": {t: self.catalog.table(t).current_version() for t in STATE_TABLES},
-            "lineage": lineage or {},
-        }
-        tmp = self._ckpt_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.rename(tmp, self._ckpt_path)
 
     def resume(self) -> bool:
-        """Reopen the last committed round: roll every table back to its
-        checkpointed snapshot (orphaned partial-round appends vanish)."""
-        if not os.path.exists(self._ckpt_path):
+        """Reopen the last committed round (``FrontierRounds.resume``).  The
+        Bloom bitmap is derived state: rebuilt from the url_seen snapshot."""
+        if not super().resume():
             return False
-        with open(self._ckpt_path) as fh:
-            state = json.load(fh)
-        for t, v in state["versions"].items():
-            tb = self.catalog.table(t)
-            if tb.current_version() != v:
-                tb.rollback_to(v)
-        self.round = state["round"]
-        self.next_seq = state["next_seq"]
-        self.rank_base = state["rank_base"]
-        self._pending_est = state["next_seq"]
-        # appends-since-compaction is unknown after a rollback: assume some
-        self._seen_appended = 1
         if self.cfg.bloom is not None:
-            # the bitmap is derived state: rebuild from the url_seen snapshot
             self._drop_bloom_broadcast()
-            self.bloom = build_bloom(
-                self._read("url_seen", URL_SEEN_DDL), "fp", self.cfg.bloom
-            )
+            self.bloom = build_bloom(self.url_seen(), "fp", self.cfg.bloom)
         return True
 
     # ------------------------------------------------------------ one round
 
-    def _read(self, name: str, ddl: str) -> DataFrame:
-        return self.catalog.read_or_empty(name, ddl)
-
-    def _sized(self, df: DataFrame, approx_rows: int) -> DataFrame:
-        """Coalesce a small per-round write to O(rows/ROWS_PER_FILE) files."""
-        parts = max(1, min(64, approx_rows // ROWS_PER_FILE + 1))
-        return df.coalesce(parts)
-
     def step(self) -> int:
         """Run one frontier round; returns number of pages fetched (0 ⇒ done).
 
-        Driver-barrier budget (engineered down for the N→4N scaling
-        criterion): ONE small action at the head — the fused politeness +
-        histogram-offsets pass (``ranks.hist_offsets``), which materializes
-        the politeness cache, yields the round's row count, AND replaces
-        both of the old head jobs (range-partitioning's sampling pass and
-        the per-partition offsets collect) — then the state writes, which
-        run CONCURRENTLY from a thread pool together with the Bloom delta
-        build (wall ≈ slowest write, not the sum).  Global rank/admission
-        ordering uses the (np, seq-bucket) histogram rank — exact, dense,
-        and with no single-partition Exchange anywhere in the round; a
-        degenerate seq distribution (one oversize bucket) falls back to the
-        two-phase range rank for that round, so no operator caps round
-        size."""
-        import time as _time
-
-        _t0 = _time.perf_counter()
+        Driver barriers: the shared head's ONE small action
+        (``FrontierRounds._head``: politeness + histogram offsets, which
+        also counts the round), then the commit wave, where the five state
+        writes and the Bloom delta build run concurrently (wall ≈ slowest
+        write, not the sum), then compaction every ``compact_every`` rounds
+        and the checkpoint."""
+        _t0 = time.perf_counter()
         cfg = self.cfg
-        pending = self._read("frontier", FRONTIER_DDL)
-        nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-        tagged = politeness.select_eligible(
-            pending, cfg.default_budget, self.budgets, cfg.salt_buckets,
-            two_phase=self._pending_est >= SALT_MIN_ROWS,
-        ).persist()
-        eligible = tagged.where("is_eligible").drop("is_eligible")
-        deferred = tagged.where("NOT is_eligible").drop("is_eligible")
-
-        # global fetch order = (priority DESC, seq): same total order the
-        # politeness windows used; _np (negated priority) makes it ascending
-        # for the rank, and all-zero priorities reduce to pure FIFO
-        eligible = eligible.withColumn(
-            "_np", -F.coalesce(F.col("priority"), F.lit(0))
+        head = self._head(
+            self._read("frontier", FRONTIER_DDL), self._pending_est, self.next_seq
         )
-        # every frontier seq < next_seq by construction, so seq >> shift
-        # lands in <= 2^16 buckets — the offsets collect stays tiny
-        shift = max(0, int(self.next_seq - 1).bit_length() - 16)
-        hoffs, n_eligible, max_group = ranks.hist_offsets(
-            eligible, "_np", "seq", shift
-        )  # the round's ONLY head action
-        _t_head = _time.perf_counter()
-        epart = None
-        if n_eligible == 0:
-            tagged.unpersist()
+        _t_head = time.perf_counter()
+        if head is None:
             return 0
-        self.round += 1
-
-        if max_group > cfg.hist_max_group:
-            # rare skew fallback (see CrawlConfig.hist_max_group): exact
-            # equal-frequency range partitioning; costs one extra job but
-            # reads the already-populated politeness cache
-            fetch_order = ["_np", "seq"]
-            epart = ranks.range_prepare(eligible, fetch_order, nparts).persist()
-            eoffs, _ = ranks.collect_offsets(epart)
-            ranked = ranks.with_rank(
-                epart, fetch_order, "rank", eoffs, base=self.rank_base
-            ).drop("_pid", "_np")
-        else:
-            ranked = ranks.with_hist_rank(
-                eligible, "_np", "seq", shift, hoffs, "rank", base=self.rank_base
-            ).drop("_np")
+        ranked, deferred, n_eligible, caches = head
         # persist the ranked batch: ~5 downstream jobs consume it (fetch
         # join, crawl_order write, missing anti-join, pmap broadcast) and
         # would otherwise each re-run the rank window + offsets join
@@ -500,6 +398,7 @@ class CrawlEngine:
         pages = pages.repartition(parse_tasks, F.xxhash64("url"))
         # the round's only Python stage: parse AND the children's fp/canon
         parsed = parse_pages(pages, self.spec.parse).persist()
+        caches += [ranked, found, parsed]
 
         # ---- child admission: dedup gate (D1) + deterministic seq assignment
         # every child carries its parent's round rank (_prank, for admission
@@ -547,35 +446,12 @@ class CrawlEngine:
             )
             reqs = flagged.where("NOT _blocked").drop("_blocked", "_dis")
         if self.shard is not None:
-            reqs = self._split_foreign(reqs)
-        nofilter_cbs = [cb for cb, dont in cfg.callbacks.items() if dont]
-        nofilter = reqs.where(F.col("callback").isin(nofilter_cbs))
-        gated = reqs.where(~F.col("callback").isin(nofilter_cbs))
-        # first-wins within the batch, in ADMISSION order = parent fetch
-        # order (_prank, child_idx) — equals (parent_seq, child_idx) under
-        # uniform priorities, and matches the simulator when they differ
-        w_fp = Window.partitionBy("fp").orderBy("_prank", "child_idx")
-        gated = (
-            gated.withColumn("_rn", F.row_number().over(w_fp))
-            .where("_rn = 1")
-            .drop("_rn")
-        )
-        seen = self._read("url_seen", URL_SEEN_DDL)
-        if self.bloom is not None:
-            # Bloom pre-filter: rows the filter calls "definitely new" never
-            # touch the url_seen table; only "maybe seen" rows (true dups +
-            # the tiny FP fraction) probe the exact anti-join.
-            probe = self._bloom_probe()
-            flagged = gated.withColumn("_maybe", probe("fp"))
-            fresh = flagged.where(~F.col("_maybe")).drop("_maybe")
-            maybe = flagged.where(F.col("_maybe")).drop("_maybe")
-            gated = fresh.unionByName(
-                maybe.join(seen.select("fp"), "fp", "left_anti")
-            )
-        else:
-            gated = gated.join(seen.select("fp"), "fp", "left_anti")
-        gated = gated.persist()  # feeds both new_seen and the children union
-        from pyspark.sql import Observation
+            reqs = self._split_foreign(reqs, caches)
+        # first-wins in ADMISSION order = parent fetch order (_prank,
+        # child_idx) — equals (parent_seq, child_idx) under uniform
+        # priorities, and matches the simulator when they differ
+        nofilter, gated = self._dedup_gate(reqs, ["_prank", "child_idx"])
+        caches.append(gated)
 
         # observed row count rides the url_seen write (no extra action) and
         # gates the periodic compaction: nothing appended → nothing to compact
@@ -588,8 +464,6 @@ class CrawlEngine:
         # sparse seq assignment: parent's round-rank (attached via pmap)
         # spreads children into disjoint, ordered stride blocks — no global
         # dense rank, hence no second driver action in the round
-        from pyspark.sql import Observation
-
         obs_children = Observation()
         children = (
             admitted.select(
@@ -607,9 +481,8 @@ class CrawlEngine:
 
         new_pending = deferred.unionByName(retries).unionByName(children)
 
-        # ---- commit the round: all five state writes run concurrently
-        # (independent tables → independent manifests; Spark schedules the
-        # jobs in parallel), then checkpoint
+        # ---- commit the round: the five state writes in one wave, then
+        # checkpoint
         order_rows = ranked.select(
             "rank", F.lit(self.round).alias("round"), "url", "host", "attempt",
             "ua", "cookie",
@@ -618,8 +491,6 @@ class CrawlEngine:
 
         n_items_est = n_eligible * 8  # pages emit a handful of items each
         seen_tb = self.catalog.table("url_seen")
-        from concurrent.futures import ThreadPoolExecutor
-
         # drop_empty: an idle/cleans round's empty append must not grow the
         # reader's file list O(rounds) between compactions (footer-only check)
         writes = [
@@ -641,12 +512,9 @@ class CrawlEngine:
             writes.append(
                 lambda: build_bloom(gated.select("fp"), "fp", self.cfg.bloom)
             )
-        _t_plan = _time.perf_counter()
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            results = [pool.submit(w) for w in writes]
-            for fut in results:
-                fut.result()
-        _t_wave = _time.perf_counter()
+        _t_plan = time.perf_counter()
+        results = self._wave(writes)
+        _t_wave = time.perf_counter()
         n_children = int(obs_children.get["n"])  # filled by the frontier write
         self._seen_appended += int(obs_seen.get["n"])  # by the url_seen write
         self._pending_est = (
@@ -671,14 +539,9 @@ class CrawlEngine:
         else:
             compaction = None
         if self.bloom is not None:
-            # all jobs that probed via the live broadcast have completed by
-            # here (the wave is eager), so after merging the round's delta
-            # the old handle can be dropped safely; the next round
-            # republishes lazily.  No-delta rounds keep the broadcast.
-            delta = results[-1].result()
-            if delta.bitmaps.any():
-                self.bloom.merge(delta)
-                self._drop_bloom_broadcast()
+            # every job that probed the live broadcast has completed by
+            # here: the wave is eager
+            self._merge_bloom(results[-1])
 
         self.next_seq += n_eligible * CHILD_STRIDE
         self.rank_base += n_eligible
@@ -692,16 +555,8 @@ class CrawlEngine:
             # the proportional-I/O invariant is observable, not assumed
             lineage["url_seen_compaction"] = compaction
         self._checkpoint(lineage=lineage)
-        parsed.unpersist()
-        found.unpersist()
-        tagged.unpersist()
-        ranked.unpersist()
-        if epart is not None:  # skew-fallback path only
-            epart.unpersist()
-        gated.unpersist()
-        for df in self._round_caches:  # fleet-mode _split_foreign cache
+        for df in caches:
             df.unpersist()
-        self._round_caches.clear()
         # per-round phase walls (always cheap to record; the fixed-cost-b
         # work reads these instead of guessing): head = politeness+offsets
         # action, plan = lazy plan assembly, wave = the concurrent
@@ -712,10 +567,43 @@ class CrawlEngine:
             "head_s": round(_t_head - _t0, 3),
             "plan_s": round(_t_plan - _t_head, 3),
             "wave_s": round(_t_wave - _t_plan, 3),
-            "post_s": round(_time.perf_counter() - _t_wave, 3),
+            "post_s": round(time.perf_counter() - _t_wave, 3),
             "parse_tasks": parse_tasks,
         }
         return n_eligible
+
+    def _dedup_gate(
+        self, reqs: DataFrame, order: list[str]
+    ) -> tuple[DataFrame, DataFrame]:
+        """D1: split child requests into ``(nofilter, gated)``.  Callbacks
+        configured dont_filter pass through; the rest keep the first row per
+        ``fp`` in ``order`` and drop every ``fp`` already in url_seen.  The
+        optional Bloom pre-filter sends only "maybe seen" rows (true dups +
+        the tiny FP fraction) through the exact anti-join, which stays the
+        source of truth.  ``gated`` is persisted (the caller releases it):
+        it feeds both the url_seen append and the admitted children."""
+        nofilter_cbs = [cb for cb, dont in self.cfg.callbacks.items() if dont]
+        nofilter = reqs.where(F.col("callback").isin(nofilter_cbs))
+        gated = reqs.where(~F.col("callback").isin(nofilter_cbs))
+        w_fp = Window.partitionBy("fp").orderBy(*order)
+        gated = (
+            gated.withColumn("_rn", F.row_number().over(w_fp))
+            .where("_rn = 1")
+            .drop("_rn")
+        )
+        seen = self.url_seen().select("fp")
+        if self.bloom is not None:
+            # one live broadcast of the bitmaps, published on first use
+            if self._bloom_bc is None:
+                self._bloom_bc = publish_bloom(self.spark, self.bloom)
+            probe = maybe_seen_from_broadcast(self._bloom_bc)
+            flagged = gated.withColumn("_maybe", probe("fp"))
+            fresh = flagged.where(~F.col("_maybe")).drop("_maybe")
+            maybe = flagged.where(F.col("_maybe")).drop("_maybe")
+            gated = fresh.unionByName(maybe.join(seen, "fp", "left_anti"))
+        else:
+            gated = gated.join(seen, "fp", "left_anti")
+        return nofilter, gated.persist()
 
     # ------------------------------------------------------------ middleware
 
@@ -727,8 +615,6 @@ class CrawlEngine:
         job pushed to Redis, `SP_JOBS/job.py:42-45`).  The fetch stage and
         crawl_order lineage see the stamped values; rotation is the
         deterministic F13 pick, mirrored driver-side by the simulator."""
-        import json as _json
-
         from ..functions.scalars import pick_rotating
 
         cfg = self.cfg
@@ -743,7 +629,7 @@ class CrawlEngine:
             else F.lit("")
         )
         headers = (
-            F.lit(_json.dumps(cfg.default_headers, sort_keys=True))
+            F.lit(json.dumps(cfg.default_headers, sort_keys=True))
             if cfg.default_headers
             else F.lit("")
         )
@@ -755,17 +641,16 @@ class CrawlEngine:
 
     # ------------------------------------------------------------ fleet
 
-    def _split_foreign(self, reqs: DataFrame) -> DataFrame:
+    def _split_foreign(self, reqs: DataFrame, caches: list) -> DataFrame:
         """Export children owned by other workers to their handoff inboxes
-        (atomic dir rename per target); return only own-host children."""
-        import uuid
-
+        (atomic dir rename per target); return only own-host children.  The
+        persisted split is appended to the round's ``caches``."""
         from .fleet import shard_of_expr
 
         w, W = self.shard
         sh = shard_of_expr(F.col("host"), W, self.host_map)
         tagged = reqs.withColumn("_w", sh).persist()
-        self._round_caches.append(tagged)  # released at end of step()
+        caches.append(tagged)
         foreign = tagged.where(F.col("_w") != w)
         stage = os.path.join(self.fleet_dir, "handoff", "stage", uuid.uuid4().hex)
         (
@@ -790,8 +675,7 @@ class CrawlEngine:
                 os.path.join(dest_dir, os.path.basename(stage)),
             )
             self.handoff_exported += 1
-        own = tagged.where(F.col("_w") == w).drop("_w")
-        return own
+        return tagged.where(F.col("_w") == w).drop("_w")
 
     def ingest_handoff(self) -> int:
         """Admit requests other workers exported to this worker's inbox:
@@ -808,9 +692,6 @@ class CrawlEngine:
             return 0
         # handoff rows carry the exporter's parse-stage fp/canon
         reqs = self.spark.read.parquet(*[os.path.join(inbox, f) for f in fresh])
-        nofilter_cbs = [cb for cb, dont in self.cfg.callbacks.items() if dont]
-        nofilter = reqs.where(F.col("callback").isin(nofilter_cbs))
-        gated = reqs.where(~F.col("callback").isin(nofilter_cbs))
         # admission order mirrors each EXPORTER's fetch order (parent_rank,
         # child_idx), totally ordered across exporters by (from_worker,
         # parent_seq) — per-worker ranks can collide, so the worker id is
@@ -821,14 +702,7 @@ class CrawlEngine:
         # separate ingests, exactly like racing RPUSHes from sibling scrapy
         # processes upstream.
         ingest_order = ["parent_rank", "child_idx", "from_worker", "parent_seq"]
-        w_fp = Window.partitionBy("fp").orderBy(*ingest_order)
-        gated = (
-            gated.withColumn("_rn", F.row_number().over(w_fp))
-            .where("_rn = 1")
-            .drop("_rn")
-        )
-        seen = self._read("url_seen", URL_SEEN_DDL)
-        gated = gated.join(seen.select("fp"), "fp", "left_anti").persist()
+        nofilter, gated = self._dedup_gate(reqs, ingest_order)
         admitted = nofilter.unionByName(gated)
         nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         apart = ranks.range_prepare(admitted, ingest_order, nparts).persist()
@@ -850,10 +724,7 @@ class CrawlEngine:
             self.catalog.table("url_seen").append(self._sized(new_seen, n_new))
             self._seen_appended += n_new
             if self.bloom is not None:
-                delta = build_bloom(new_seen, "fp", self.cfg.bloom)
-                if delta.bitmaps.any():
-                    self.bloom.merge(delta)
-                    self._drop_bloom_broadcast()
+                self._merge_bloom(build_bloom(new_seen, "fp", self.cfg.bloom))
             self.next_seq += n_new
             self._pending_est += n_new
         apart.unpersist()
@@ -862,33 +733,10 @@ class CrawlEngine:
         self.handoff_consumed += len(fresh)
         return len(fresh)
 
-    def run(self) -> dict:
-        """Loop to frontier exhaustion (idle-close analogue, SURVEY.md T2)."""
-        total = 0
-        while self.round < self.cfg.max_rounds:
-            n = self.step()
-            if n == 0:
-                break
-            total += n
-        return {"rounds": self.round, "fetched": total}
-
     # ------------------------------------------------------------ outputs
-
-    def crawl_order(self) -> DataFrame:
-        return self._read("crawl_order", CRAWL_ORDER_DDL)
 
     def url_seen(self) -> DataFrame:
         return self._read("url_seen", URL_SEEN_DDL)
-
-    def metrics(self) -> DataFrame:
-        """Per-(round, host) fetch counts — the reference's progress metrics
-        (A3/A4), derived from crawl_order (exact same rows, grouped)."""
-        return (
-            self.crawl_order()
-            .groupBy("round", "host")
-            .agg(F.count("*").alias("n"))
-            .select("round", "host", "n")
-        )
 
     def failed(self) -> DataFrame:
         return self._read("failed", FAILED_DDL)

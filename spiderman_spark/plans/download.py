@@ -30,6 +30,11 @@ Spark mapping (SURVEY.md §3.3, S5/S16/J4/P4/P8):
 - bytes        → appended to the ``images`` table with exactly the input_hint
                  shape (image_id, bytes, w, h, fmt, caption, phash) + lineage.
 
+Rounds share ``CrawlEngine``'s skeleton (plans/rounds.py): the same
+politeness + histogram-rank batch head (fetch order = seq: the download
+frontier has no priority), the concurrent commit wave of the round's four
+writes, and checkpoint/resume over ``dl_checkpoint.json``.
+
 Determinism contract: job order = ``ORDER BY keyid`` (the reference's SQL scan
 order is engine-dependent; keyid order is the deterministic choice, applied
 identically to the simulator's seed list).  The reference's in-place retry
@@ -42,18 +47,14 @@ so both rows reach the reference's end state.
 
 from __future__ import annotations
 
-import json
-import os
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..corpusgen import RETRY_HTTP_CODES
-from ..operators import politeness, ranks
-from ..operators.politeness import SALT_MIN_ROWS
-from ..tableio import Catalog
+from ..operators import ranks
+from .rounds import FrontierRounds
 
 STATUS_PENDING = "未下载"
 STATUS_OK = "下载成功"
@@ -68,8 +69,6 @@ IMAGES_DDL = (
     "image_id string, bytes binary, w int, h int, fmt string, caption string,"
     " phash long, url string, file_path string, verified boolean, round int"
 )
-
-_DL_STATE = ("dl_frontier", "dl_order", "images", "file_meta")
 
 # file_meta rows per hash bucket.  A row is ~50-150 B in parquet (54 B for
 # the generated corpora's rows), so a bucket is one ~100-300 MB file: big
@@ -134,7 +133,13 @@ def _decode_verify_udf():
     return stage
 
 
-class ImageDownloader:
+class ImageDownloader(FrontierRounds):
+    STATE_TABLES = ("dl_frontier", "dl_order", "images", "file_meta")
+    STATE_ATTRS = ("round", "rank_base", "seq_hi")
+    CHECKPOINT = "dl_checkpoint.json"
+    ORDER_TABLE = "dl_order"
+    ORDER_DDL = DL_ORDER_DDL
+
     def __init__(
         self,
         spark: SparkSession,
@@ -144,19 +149,13 @@ class ImageDownloader:
         config: DownloadConfig | None = None,
         budgets: DataFrame | None = None,
     ):
-        self.spark = spark
-        self.cfg = config or DownloadConfig()
+        super().__init__(spark, workdir, config or DownloadConfig(), budgets)
         # http_status per url (the "network's" response code for the file GET)
         self.status_corpus = status_corpus.select("url", "http_status")
         self.image_corpus = image_corpus  # input_hint shape + url
-        self.catalog = Catalog(spark, workdir)
-        self.budgets = budgets
-        self.round = 0
-        self.rank_base = 0
         # exclusive bound on the frontier's seqs, and so on its size: the
         # frontier only shrinks after make_job (retries keep their seq)
         self.seq_hi = 0
-        self._ckpt_path = os.path.join(workdir, "dl_checkpoint.json")
 
     # ------------------------------------------------------------ job scan
 
@@ -232,73 +231,30 @@ class ImageDownloader:
 
     # ------------------------------------------------------------ rounds
 
-    def _checkpoint(self, lineage: dict | None = None) -> None:
-        state = {
-            "round": self.round,
-            "rank_base": self.rank_base,
-            "seq_hi": self.seq_hi,
-            "versions": {t: self.catalog.table(t).current_version() for t in _DL_STATE},
-            "lineage": lineage or {},
-        }
-        tmp = self._ckpt_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.rename(tmp, self._ckpt_path)
-
-    def resume(self) -> bool:
-        if not os.path.exists(self._ckpt_path):
-            return False
-        with open(self._ckpt_path) as fh:
-            state = json.load(fh)
-        for t, v in state["versions"].items():
-            tb = self.catalog.table(t)
-            if tb.current_version() != v:
-                tb.rollback_to(v)
-        self.round = state["round"]
-        self.rank_base = state["rank_base"]
-        self.seq_hi = state["seq_hi"]
-        return True
-
     def step(self) -> int:
         """Run one download round; returns the number of files fetched
-        (0 ⇒ done).  Same head as ``CrawlEngine.step``: ONE small action,
-        the fused politeness + histogram-offsets pass, yields the round's
-        count and its rank offsets; then the four writes (order append,
-        images append, status MERGE, frontier replace) run concurrently."""
+        (0 ⇒ done).  The shared head (``FrontierRounds._head``: ONE small
+        action) yields the round's count and its rank offsets; then the four
+        writes (order append, images append, status MERGE, frontier replace)
+        run in one concurrent wave.  Frontier seqs are distinct and below
+        ``seq_hi``, so a rank group holds at most seq_hi / 2^15 rows: the
+        head's skew fallback needs seq_hi > 2^32."""
         cfg = self.cfg
-        pending = self.catalog.read_or_empty("dl_frontier", DL_FRONTIER_DDL)
-        tagged = politeness.select_eligible(
-            pending, cfg.default_budget, self.budgets, cfg.salt_buckets,
-            two_phase=self.seq_hi >= SALT_MIN_ROWS,
-        ).persist()
-        eligible = tagged.where("is_eligible").drop("is_eligible")
-        deferred = tagged.where("NOT is_eligible").drop("is_eligible")
-
-        # fetch order = seq (FIFO).  Frontier seqs are distinct and below
-        # seq_hi, so a (0, seq >> shift) group holds at most seq_hi / 2^15
-        # rows: no skewed rank window, no range-partitioned fallback
-        shift = max(0, int(self.seq_hi - 1).bit_length() - 16)
-        eligible = eligible.withColumn("_np", F.lit(0))
-        hoffs, n_eligible, _ = ranks.hist_offsets(eligible, "_np", "seq", shift)
-        if n_eligible == 0:
-            tagged.unpersist()
+        head = self._head(
+            self._read("dl_frontier", DL_FRONTIER_DDL), self.seq_hi, self.seq_hi
+        )
+        if head is None:
             return 0
-        self.round += 1
-
+        ranked, deferred, n_eligible, caches = head
         # persisted: the status join, the order append and the status
         # updates all read the ranked batch
-        ranked = (
-            ranks.with_hist_rank(
-                eligible, "_np", "seq", shift, hoffs, "rank", base=self.rank_base
-            )
-            .drop("_np")
-            .persist()
-        )
+        ranked = ranked.persist()
         # the MERGE's buckets, before any write: every status update is for
         # a url of this batch
-        touched = self.catalog.table("file_meta").buckets_of(eligible, "url")
+        touched = self.catalog.table("file_meta").buckets_of(ranked, "url")
         batch = F.broadcast(ranked)
         with_status = self.status_corpus.join(batch, "url", "inner").persist()
+        caches += [ranked, with_status]
 
         retry = F.col("http_status").isin(list(RETRY_HTTP_CODES)) & (
             F.col("attempt") < cfg.retry_times
@@ -355,36 +311,23 @@ class ImageDownloader:
             "rank", F.lit(self.round).alias("round"), "url", "host", "attempt"
         )
 
-        # small state appends coalesce to few files; the images append keeps
+        # small state writes coalesce to few files; the images append keeps
         # its natural partitioning (wide binary rows, parallel write)
-        n_files = max(1, min(64, n_eligible // 200_000 + 1))
-        # four independent tables → four concurrent write jobs
-        writes = [
-            lambda: self.catalog.table("dl_order").append(order_rows.coalesce(n_files)),
+        self._wave([
+            lambda: self.catalog.table("dl_order").append(
+                self._sized(order_rows, n_eligible)
+            ),
             lambda: self.catalog.table("images").append(images),
             lambda: self._merge_status(updates, touched),
             lambda: self.catalog.table("dl_frontier").replace(
-                deferred.unionByName(retries).coalesce(n_files)
+                self._sized(deferred.unionByName(retries), n_eligible)
             ),
-        ]
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            for fut in [pool.submit(w) for w in writes]:
-                fut.result()
+        ])
         self.rank_base += n_eligible
         self._checkpoint(lineage={"round": self.round, "n_eligible": n_eligible})
-        with_status.unpersist()
-        ranked.unpersist()
-        tagged.unpersist()
+        for df in caches:
+            df.unpersist()
         return n_eligible
-
-    def run(self) -> dict:
-        total = 0
-        while self.round < self.cfg.max_rounds:
-            n = self.step()
-            if n == 0:
-                break
-            total += n
-        return {"rounds": self.round, "fetched": total}
 
     # ------------------------------------------------------------ merge
 
@@ -417,19 +360,7 @@ class ImageDownloader:
     # ------------------------------------------------------------ outputs
 
     def images(self) -> DataFrame:
-        return self.catalog.read_or_empty("images", IMAGES_DDL)
+        return self._read("images", IMAGES_DDL)
 
     def file_meta(self) -> DataFrame:
         return self.catalog.table("file_meta").read()
-
-    def crawl_order(self) -> DataFrame:
-        return self.catalog.read_or_empty("dl_order", DL_ORDER_DDL)
-
-    def metrics(self) -> DataFrame:
-        """Per-(round, host) fetch counts, derived from dl_order (A3/A4)."""
-        return (
-            self.crawl_order()
-            .groupBy("round", "host")
-            .agg(F.count("*").alias("n"))
-            .select("round", "host", "n")
-        )

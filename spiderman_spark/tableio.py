@@ -325,11 +325,13 @@ class ParquetManifestTable:
         return self._manifest(version)["props"]
 
     def rollback_to(self, version: int) -> int:
-        """Commit a new snapshot whose file list equals ``version``'s —
-        orphaned appends from a crashed round become invisible (resume path)."""
+        """Commit a new snapshot whose file list and props equal
+        ``version``'s — orphaned appends from a crashed round become
+        invisible (resume path), and a bucketed table keeps its layout."""
         m = self._manifest(version)
         return self._commit(
-            m["files"], {"rolled_back_to": version}, sizes=m.get("sizes")
+            m["files"], {**m["props"], "rolled_back_to": version},
+            sizes=m.get("sizes"),
         )
 
 

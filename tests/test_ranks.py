@@ -85,23 +85,29 @@ def test_hist_rank_plan_has_no_single_partition_exchange(spark):
     assert "Exchange SinglePartition" not in plan
 
 
-def test_hist_skew_fallback_in_step(spark, workdir):
+def test_hist_skew_fallback_in_step(spark, workdir, monkeypatch):
     """A degenerate seq distribution (every eligible row in one bucket) must
-    trip hist_max_group and take the exact range-partitioned path — same
+    trip HIST_MAX_GROUP and take the exact range-partitioned path — same
     crawl result either way."""
     from spiderman_spark import corpusgen as cg
     from spiderman_spark import simulator as sim
+    from spiderman_spark.plans import rounds
     from spiderman_spark.plans.crawl import CrawlConfig, CrawlEngine
 
     spec = cg.UNIT
-    results = []
+    range_ranks = []  # collect_offsets calls: only the fallback ranks by range
+    real_collect = ranks.collect_offsets
+    monkeypatch.setattr(
+        ranks, "collect_offsets",
+        lambda part: range_ranks.append(1) or real_collect(part),
+    )
+    results, fallbacks = [], []
     for tag, hist_max in (("hist", 1 << 17), ("fallback", 1)):
+        monkeypatch.setattr(rounds, "HIST_MAX_GROUP", hist_max)
+        range_ranks.clear()
         engine = CrawlEngine(
             spark, cg.build_crawl_corpus(spark, spec), f"{workdir}-{tag}",
-            CrawlConfig(
-                callbacks={"list": True, "detail": False}, default_budget=4,
-                hist_max_group=hist_max,
-            ),
+            CrawlConfig(callbacks={"list": True, "detail": False}, default_budget=4),
         )
         engine.seed(sim.make_seeds(spec))
         engine.run()
@@ -111,7 +117,9 @@ def test_hist_skew_fallback_in_step(spark, workdir):
                 for r in engine.crawl_order().orderBy("rank").collect()
             ]
         )
+        fallbacks.append(len(range_ranks))
     assert results[0] == results[1]
+    assert fallbacks[0] == 0 and fallbacks[1] > 0
 
 
 def test_politeness_single_phase_equals_two_phase(spark):
