@@ -26,8 +26,11 @@ to *content* dedup for training-data curation.  Design notes per operator:
   property-tested), ``simhash_hex`` the md5 bit family (DuckDB-oracled).
 """
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
+from .similarity import VERIFY_BROADCAST_MAX_BYTES, _verify_broadcast_ok
 from .textstats import tokens
 
 
@@ -225,36 +228,41 @@ def minband_pair_union(
     stats_out: dict | None = None,
     x_rows: int | None = None,
 ):
-    """Exactly-once banded candidate pairs: per-band self-join keyed on band
-    b's bucket, emitting a pair only when NO earlier band shares a bucket, so
-    each candidate appears exactly once at its minimum shared band and no
-    cross-band ``distinct`` — a full shuffle of the bands-times-inflated raw
-    pair stream — is ever needed.
+    """Exactly-once banded candidate pairs from ONE equi-join: both sides are
+    exploded to one row per band keyed by (band, bucket), and a joined pair
+    is kept only at its minimum shared band, so each candidate appears
+    exactly once and no cross-band ``distinct`` — a full shuffle of the
+    bands-times-inflated raw pair stream — is ever needed.  The single
+    shuffle of the set-similarity-join signature scheme (PAPERS.md,
+    *Distributed Streaming Set Similarity Join*): at small inputs every
+    join is its own stage job, so one join instead of one per band (plus
+    one per hot band) is what the operator costs.
 
     ``x``/``y``: the two (pre-aliased) sides carrying whatever columns the
     verify step needs; ``slice_a(b)`` / ``slice_b(b)``: the band-b bucket
     Column of each side; ``pair_predicate``: which joined rows form a pair
     (default ``id_a < id_b``, the self-join convention; query→corpus callers
-    pass their own).  The earlier-band filters evaluate map-side on columns
-    the joined rows already carry, so the returned union flows narrow into
-    the caller's verify.  Shared by the MinHash, sign-sketch-embedding,
-    ANN-LSH, and phash near-dup operators — the exactly-once invariant lives
-    here once.
+    pass their own).  The minimum shared band is a ``CASE WHEN`` over the
+    slices the joined rows already carry, evaluated right after the join,
+    so the returned pairs flow narrow into the caller's verify.  Shared by
+    the MinHash, sign-sketch-embedding, ANN-LSH, and phash near-dup
+    operators — the exactly-once invariant lives here once.
 
-    Hot-bucket guard (``max_bucket_rows``): the per-band joins assume bucket
+    Hot-bucket guard (``max_bucket_rows``): the banded join assumes bucket
     groups stay tiny; a degenerate corpus (millions of near-empty documents
     sharing one signature, solid-color thumbnails sharing a phash band)
     makes ONE bucket key quadratic in the verify input.  With a cap set, a
     single narrow counting pass finds buckets whose x-side group exceeds it
     and applies ``oversize_policy``:
 
-    * ``'salt'`` (exact, the default): oversize buckets join in a separate
-      salted branch — x rows spread over ``ceil(n/cap)`` salts via
-      ``xxhash64(salt_col_a)``, y rows replicated across salts — so the
-      SAME pair set is produced but no task ever owns the whole m×m group.
-      Requires ``salt_col_a`` (a per-row-distinct x column).
-    * ``'skip'``: oversize buckets are excluded from their band's join and
-      LOGGED (never silent); the earlier-band filters treat a skipped band
+    * ``'salt'`` (exact, the default): the join key carries a salt — x rows
+      of an oversize (band, bucket) spread over ``ceil(n/cap)`` salts via
+      ``xxhash64(salt_col_a)``, y rows replicated across those salts, every
+      other row salt 0 — so the SAME pair set is produced by the same join
+      but no task ever owns the whole m×m group.  Requires ``salt_col_a``
+      (a per-row-distinct x column).
+    * ``'skip'``: oversize buckets are excluded from their band's rows and
+      LOGGED (never silent); the minimum-band test treats a skipped band
       as not-shared, so a pair still surfaces at its first non-hot shared
       band.  Pairs whose every shared band is hot are dropped — recall
       loss, bounded and reported via ``stats_out``/logging.
@@ -266,7 +274,6 @@ def minband_pair_union(
     if it is <= the cap, NO bucket can exceed the cap and the counting pass
     is skipped for free."""
     import logging
-    import math
 
     if pair_predicate is None:
         pair_predicate = F.col("id_a") < F.col("id_b")
@@ -293,50 +300,64 @@ def minband_pair_union(
                 oversize_policy,
                 {b: {"buckets": len(v), "rows": sum(v.values())} for b, v in hot.items()},
             )
+    # salts per hot band; 0 marks a skipped band
+    salts = {
+        b: max(2, int(min(max_salt, math.ceil(max(v.values()) / max_bucket_rows))))
+        if oversize_policy == "salt" else 0
+        for b, v in hot.items()
+    }
     if stats_out is not None:
         stats_out["hot"] = hot
         stats_out["policy"] = oversize_policy if max_bucket_rows else None
-        stats_out["salt_factor"] = {}
+        stats_out["salt_factor"] = salts if oversize_policy == "salt" else {}
 
-    def earlier_band_filters(j, b):
-        for i in range(b):
-            neq = slice_a(i) != slice_b(i)
-            if oversize_policy == "skip" and hot.get(i):
-                # band i skipped this bucket, so it did NOT emit there —
-                # treat a hot earlier band as not-shared
-                neq = neq | slice_a(i).cast("string").isin(list(hot[i]))
-            j = j.where(neq)
-        return j
+    def is_hot(slice_of, b):
+        return slice_of(b).cast("string").isin(list(hot[b]))
 
-    parts = []
-    for b in range(bands):
-        xb, yb = x, y
-        if hot.get(b):
-            hot_b = list(hot[b])
-            xb = xb.where(~slice_a(b).cast("string").isin(hot_b))
-            yb = yb.where(~slice_b(b).cast("string").isin(hot_b))
-        j = xb.join(yb, slice_a(b) == slice_b(b)).where(pair_predicate)
-        parts.append(earlier_band_filters(j, b))
-        if hot.get(b) and oversize_policy == "salt":
-            hot_b = list(hot[b])
-            s = int(min(max_salt, math.ceil(max(hot[b].values()) / max_bucket_rows)))
-            s = max(s, 2)
-            if stats_out is not None:
-                stats_out["salt_factor"][b] = s
-            xh = x.where(slice_a(b).cast("string").isin(hot_b)).withColumn(
-                "_hsx", F.pmod(F.xxhash64(F.col(salt_col_a)), F.lit(s)).cast("int")
-            )
-            yh = y.where(slice_b(b).cast("string").isin(hot_b)).withColumn(
-                "_hsy", F.explode(F.array(*[F.lit(i) for i in range(s)]))
-            )
-            jh = xh.join(
-                yh, (slice_a(b) == slice_b(b)) & (F.col("_hsx") == F.col("_hsy"))
-            ).where(pair_predicate)
-            parts.append(earlier_band_filters(jh, b).drop("_hsx", "_hsy"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    def banded(side, slice_of, t):
+        """One row per (row, band): ``_b{t}`` the band, ``_k{t}`` its
+        bucket and, with hot buckets, ``_n{t}`` the bucket's salt count
+        (1 when cold, 0 when skipped)."""
+
+        def entry(b):
+            cols = [F.lit(b).alias(f"_b{t}"), slice_of(b).alias(f"_k{t}")]
+            if hot:
+                n = F.lit(1)
+                if b in hot:
+                    n = F.when(is_hot(slice_of, b), F.lit(salts[b])).otherwise(n)
+                cols.append(n.alias(f"_n{t}"))
+            return F.struct(*cols)
+
+        out = side.select("*", F.inline(F.array(*[entry(b) for b in range(bands)])))
+        if hot and oversize_policy == "skip":
+            out = out.where(F.col(f"_n{t}") > 0)
+        return out
+
+    xs, ys = banded(x, slice_a, "x"), banded(y, slice_b, "y")
+    key = (F.col("_bx") == F.col("_by")) & (F.col("_kx") == F.col("_ky"))
+    if hot and oversize_policy == "salt":
+        xs = xs.withColumn(
+            "_sx", F.pmod(F.xxhash64(F.col(salt_col_a)), F.col("_nx")).cast("int")
+        )
+        ys = ys.withColumn("_sy", F.explode(F.sequence(F.lit(0), F.col("_ny") - 1)))
+        key = key & (F.col("_sx") == F.col("_sy"))
+
+    def shared(b):
+        eq = slice_a(b) == slice_b(b)
+        if oversize_policy == "skip" and b in hot:
+            # the skipped band did NOT emit this bucket: not-shared
+            eq = eq & ~is_hot(slice_a, b)
+        return eq
+
+    first = F.when(shared(0), F.lit(0))
+    for b in range(1, bands):
+        first = first.when(shared(b), F.lit(b))
+    return (
+        xs.join(ys, key)
+        .where(pair_predicate & (first == F.col("_bx")))
+        # drop ignores the salt columns when there are none
+        .drop("_bx", "_kx", "_nx", "_sx", "_by", "_ky", "_ny", "_sy")
+    )
 
 
 def minhash_lsh_pairs(
@@ -357,12 +378,13 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate pairs from banded LSH, then exact Jaccard verify on candidates.
 
-    Per-band self-joins keyed by the band's md5-slice bucket — bucket groups
-    stay tiny, so the pair blow-up is bounded; each pair is emitted only at
-    its minimum shared band (no cross-band distinct, see inline comment); the
-    exact verify touches only candidates (the 100 TB-scale near-dup plan).
-    The shingle pass is computed ONCE and persisted — signatures, banding,
-    and the verify joins all read it (the round-1 headline profile showed the
+    One banded join keyed by (band, md5-slice bucket) — bucket groups stay
+    tiny, so the pair blow-up is bounded; each pair is emitted only at its
+    minimum shared band (no cross-band distinct, see ``minband_pair_union``);
+    the exact verify touches only candidates (the 100 TB-scale near-dup
+    plan).  The shingle pass and the band buckets are computed ONCE and
+    persisted — the banded join's two sides, the hot-bucket count and the
+    verify joins all read them (the round-1 headline profile showed the
     tokenize+shingle expression tree, evaluated three times, dominating q18).
 
     ``hash_family``: 'xxhash64' (production/bench, fixture-oracled) or 'md5'
@@ -382,9 +404,11 @@ def minhash_lsh_pairs(
     make |pairs| quadratic in clique size), so broadcasting grams keeps the
     big pair stream from shuffling — but a FORCED broadcast of a 100 TB-scale
     doc table OOMs the driver.  ``None`` (default) adapts on the measured doc
-    count vs ``broadcast_max_rows`` (the pattern of the crawl round's fetch
-    join, ``plans.crawl.BROADCAST_MAX_ROWS``); True/False force.  Above the
-    threshold AQE picks the join.
+    count AND estimated grams bytes: ``similarity._verify_broadcast_ok`` at
+    the mean grams per doc, 8 B a gram (the hashed width), under
+    ``broadcast_max_rows`` and ``VERIFY_BROADCAST_MAX_BYTES`` — many grams
+    per doc refuse the broadcast under the row cap.  True/False force.
+    Refused, AQE picks the join.
 
     ``materialize=True`` (default) computes the verified pairs eagerly
     (``localCheckpoint``) and unpersists the shingle cache before returning —
@@ -392,7 +416,7 @@ def minhash_lsh_pairs(
     returns the lazy plan (for ``explain`` inspection) and never persists.
 
     ``max_bucket_rows``/``oversize_policy``: hot-bucket guard for the banded
-    joins (see ``minband_pair_union``) — with the default exact 'salt'
+    join (see ``minband_pair_union``) — with the default exact 'salt'
     policy the pair set is unchanged, but a degenerate corpus (mass-
     duplicated signatures) can no longer hand one task a quadratic bucket.
     The guard's counting pass is an action, so it is disabled in
@@ -406,52 +430,44 @@ def minhash_lsh_pairs(
         F.size("grams") > 0
     )
     if materialize:
-        # Rebalance BEFORE caching: with min-band candidates there is no
-        # shuffle anywhere downstream (the old cross-band distinct was one),
-        # so every stage inherits the scan's partitioning — a small or
-        # skewed input would run the bands-times-inflated pair enumeration
-        # and the gram-intersection verify on a handful of cores.  Same
-        # reasoning as the crawl round's parse rebalance (plans/crawl.py
-        # module docstring): pair enumeration cost is per-collision, not
-        # per-doc, so spread docs evenly first (the shuffle moves only the
-        # doc-sized shingle frame, never pairs).
+        # Rebalance BEFORE caching: the k-permutation signatures are hashed
+        # in the stage that populates the cache, so a small or skewed scan
+        # would run them on a handful of cores.  Same reasoning as the crawl
+        # round's parse rebalance (plans/crawl.py module docstring); the
+        # shuffle moves only the doc-sized shingle frame, never pairs.
         sh = sh.repartition(df.sparkSession.sparkContext.defaultParallelism, "did")
-        sh = sh.persist()
-    sigs = sh.select("did", _sig_expr(k, hash_family, prehashed=prehashed).alias("sig"))
-    # One row per doc carrying every band bucket.  Persisted when allowed:
-    # the per-band joins below each read it, and recomputing would redo the
-    # k-permutation signature hashing once per band.
-    buckets = sigs.select(
+    # One row per doc carrying its grams and every band bucket, so the
+    # k-permutation signature hashing runs once per doc.
+    sigs = sh.select("did", "grams", _sig_expr(k, hash_family, prehashed=prehashed).alias("sig"))
+    sh = sigs.select(
         "did",
+        "grams",
         *[band_bucket("sig", b, rows_per_band).alias(f"bk{b}") for b in range(bands)],
     )
+    n_docs, width = None, 0
     if materialize:
-        buckets = buckets.persist()
-    use_bc, n_docs = broadcast_grams, None
+        # one small action populates the cache before anything races it and
+        # measures the verify's broadcast payload; the count doubles as the
+        # guard's free bound
+        sh = sh.persist()
+        n_docs, n_grams = sh.agg(F.count(F.lit(1)), F.sum(F.size("grams"))).first()
+        width = math.ceil((n_grams or 0) / max(n_docs, 1))  # mean grams per doc
+    use_bc = broadcast_grams
     if use_bc is None:
-        # one small action; counting BUCKETS (1 row per shingled doc, so the
-        # same number as sh) eagerly populates both caches before the
-        # per-band joins fan out — 2*bands lazy scans racing an unpopulated
-        # cache would each recompute the k-permutation signatures.  In
-        # plan-inspection mode (no persist, no actions allowed) apply NO
-        # hint: a forced broadcast of an unbounded grams table is exactly
-        # the driver-OOM this threshold exists to prevent, so let AQE pick
-        # the join if the lazy plan is later executed
-        if materialize:
-            n_docs = buckets.count()  # doubles as the guard's free bound
-            use_bc = n_docs <= broadcast_max_rows
-        else:
-            use_bc = False
-    # Min-band candidate generation (minband_pair_union): the joins shuffle
-    # only the tiny per-doc buckets table; the pair stream itself stays
-    # narrow from enumeration through the (broadcast) verify join.  The
-    # cross-band distinct this replaces was the dominant cost of the
-    # operator at every measured scale.
-    x = buckets.select(
+        # in plan-inspection mode (no actions) n_docs is None: apply NO hint,
+        # since a forced broadcast of an unbounded grams table is exactly
+        # the driver-OOM this gate exists to prevent
+        use_bc = _verify_broadcast_ok(
+            n_docs, width, broadcast_max_rows, VERIFY_BROADCAST_MAX_BYTES
+        )
+    # Min-band candidate generation (minband_pair_union): the join shuffles
+    # only the tiny per-doc buckets rows; the pair stream itself stays
+    # narrow from enumeration through the (broadcast) verify join.
+    x = sh.select(
         F.col("did").alias("id_a"),
         *[F.col(f"bk{i}").alias(f"xa{i}") for i in range(bands)],
     )
-    y = buckets.select(
+    y = sh.select(
         F.col("did").alias("id_b"),
         *[F.col(f"bk{i}").alias(f"yb{i}") for i in range(bands)],
     )
@@ -467,13 +483,6 @@ def minhash_lsh_pairs(
         stats_out=lsh_stats,
         x_rows=n_docs,
     ).select("id_a", "id_b")
-    if materialize:
-        # plan barrier, not just a cache: left open, Catalyst pushes the
-        # verify's grams joins INTO the union branches ahead of the min-band
-        # filters, running the per-pair gram intersection on the bands-times-
-        # inflated raw stream (measured 4x the staged cost).  Persisting cand
-        # pins the two-phase shape: dedup'd pairs first, verify second.
-        cand = cand.persist()
     a = sh.select(F.col("did").alias("id_a"), F.col("grams").alias("ga"))
     b = sh.select(F.col("did").alias("id_b"), F.col("grams").alias("gb"))
     if use_bc:
@@ -497,8 +506,6 @@ def minhash_lsh_pairs(
         # released deterministically instead of leaking per call
         verified = verified.localCheckpoint()
         sh.unpersist()
-        buckets.unpersist()
-        cand.unpersist()
     return verified
 
 

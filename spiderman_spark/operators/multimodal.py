@@ -220,7 +220,7 @@ def phash_neardup_pairs(
     every band), so unlike the probabilistic LSH paths this variant is exact
     while still never comparing all pairs.  Exact hamming verify
     (bit_count(xor)) runs on candidates only.  All JVM bitwise Column exprs
-    inside codegen; the per-band joins are keyed by the phash slice (tiny
+    inside codegen; one banded join is keyed by (band, phash slice) (tiny
     groups on non-degenerate corpora) and the pair stream itself is never
     shuffled (min-band exactly-once emission, no cross-band distinct).
     """
@@ -250,8 +250,8 @@ def phash_neardup_pairs(
     def slice_of(col, b):
         return F.shiftright(col, b * bits).bitwiseAND(F.lit(mask))
 
-    # Min-band candidates (dedup.minband_pair_union): the earlier-band
-    # filters read the two phash longs the rows already carry, so no
+    # Min-band candidates (dedup.minband_pair_union): the minimum-shared-
+    # band test reads the two phash longs the rows already carry, so no
     # cross-band `.distinct()` shuffle of the inflated pair stream is needed.
     from .dedup import minband_pair_union
 

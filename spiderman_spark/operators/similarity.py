@@ -160,6 +160,10 @@ def embedding_neardup_exact(
     )
 
 
+# default byte bound of the verify joins' broadcast sides
+VERIFY_BROADCAST_MAX_BYTES = 256 << 20
+
+
 def _verify_broadcast_ok(
     n_rows: int | None, dim: int, max_rows: int, max_bytes: int
 ) -> bool:
@@ -187,16 +191,16 @@ def embedding_neardup_lsh(
     oversize_policy: str = "salt",
     materialize: bool = True,
     broadcast_max_rows: int = 2_000_000,
-    broadcast_max_bytes: int = 256 << 20,
+    broadcast_max_bytes: int = VERIFY_BROADCAST_MAX_BYTES,
 ) -> DataFrame:
     """Scale path for embedding near-dup: random-hyperplane sign sketch →
-    per-band bucket self-joins (min-band, exactly-once) → exact cosine verify
-    on candidates only.
+    one banded bucket self-join (min-band, exactly-once) → exact cosine
+    verify on candidates only.
 
-    The band self-joins shuffle a NARROW (id, sketch-long) frame only —
-    round-4 verdict #2: the previous shape carried both embedding vectors
-    through every per-band exchange, multiplying the dominant shuffle's
-    bytes by ~bands× at production dims (768-4096 floats).  Vectors are
+    The banded self-join shuffles a NARROW (id, sketch-long) frame only —
+    round-4 verdict #2: an earlier shape carried both embedding vectors
+    through every band exchange, multiplying the dominant shuffle's bytes
+    by ~bands× at production dims (768-4096 floats).  Vectors are
     joined back onto the (output-proportional) candidate stream for the
     cosine verify, broadcast-adaptively when the doc count fits under
     ``broadcast_max_rows`` AND the estimated broadcast payload —
@@ -206,16 +210,15 @@ def embedding_neardup_lsh(
     8 GB+ broadcast at production dims, e.g. 1M × 4096 floats).
 
     ``materialize=True`` (default): the sketch frame is persisted — the
-    2×bands band-join branches (and the hot-bucket counting pass) would
-    otherwise each recompute the planes×dim projections — the candidate
-    frame is persisted as a plan barrier (dedup'd pairs first, verify
-    second), and the verified pairs are checkpointed so every cache is
-    released before returning.  ``materialize=False`` returns the lazy plan
+    banded join's two sides, the hot-bucket counting pass and the verify
+    joins would otherwise each recompute the planes×dim projections — and
+    the verified pairs are checkpointed so the cache is released before
+    returning.  ``materialize=False`` returns the lazy plan
     (guard disabled — its counting pass is an action; no broadcast hint —
     let AQE pick).
 
-    Cost is O(rows × planes) sketching + per-band joins keyed by the sketch
-    slice, whose groups stay small; the pair stream itself is never shuffled.
+    Cost is O(rows × planes) sketching + one join keyed by (band, sketch
+    slice), whose groups stay small; the pair stream itself is never shuffled.
     Near-identical vectors agree on nearly all sign bits, so recall at high
     thresholds is excellent (pytest-measured vs the exact baseline).
     ``max_bucket_rows``: hot-bucket guard (``dedup.minband_pair_union``) —
@@ -233,8 +236,8 @@ def embedding_neardup_lsh(
     n_rows = None
     if materialize:
         sk = sk.persist()
-        # one small action: eagerly populates the cache before the 2×bands
-        # lazy band branches race it, doubles as the guard's free x_rows
+        # one small action: eagerly populates the cache before the banded
+        # join's two sides race it, doubles as the guard's free x_rows
         # bound and the verify-join broadcast decision
         n_rows = sk.count()
 
@@ -242,9 +245,9 @@ def embedding_neardup_lsh(
         return F.shiftright(col, b * bits_per_band).bitwiseAND(F.lit(mask))
 
     # Min-band candidates (dedup.minband_pair_union) over the NARROW
-    # (id, sketch) projection: the earlier-band filters need nothing beyond
-    # the two sketch longs, and no band exchange ever carries a vector
-    # (plan-asserted in tests/test_plans.py).
+    # (id, sketch) projection: the minimum-shared-band test needs nothing
+    # beyond the two sketch longs, and no band exchange ever carries a
+    # vector (plan-asserted in tests/test_plans.py).
     from .dedup import minband_pair_union
 
     x = sk.select(F.col("did").alias("id_a"), F.col("_sk").alias("ska"))
@@ -260,12 +263,6 @@ def embedding_neardup_lsh(
         salt_col_a="id_a",
         x_rows=n_rows,
     ).select("id_a", "id_b")
-    if materialize:
-        # plan barrier (the minhash_lsh_pairs lesson): left open, Catalyst
-        # pushes the verify's vector joins INTO the union branches ahead of
-        # the min-band filters — the exact shuffle-bytes blow-up this
-        # narrowing removes
-        cand = cand.persist()
     # row norms ride the (persisted) sketch frame — computed once per row at
     # sketch time, not re-folded per candidate pair in the verify projection
     a = sk.select(
@@ -292,7 +289,6 @@ def embedding_neardup_lsh(
     )
     if materialize:
         out = out.localCheckpoint()
-        cand.unpersist()
         sk.unpersist()
     return out
 
@@ -496,7 +492,7 @@ def lsh_topk(
     ``planes``-bit sign sketch.  ``max_bucket_rows``: hot-bucket guard over
     the CORPUS side's band groups (``dedup.minband_pair_union``; exact
     'salt' policy by default).  ``materialize=True``: the corpus sketch is
-    persisted across the band branches + counting pass and released after
+    persisted across the banded join + counting pass and released after
     the (k-per-query, tiny) result checkpoints; False returns the lazy plan
     with the guard disabled."""
     from pyspark.sql import Window
@@ -510,7 +506,7 @@ def lsh_topk(
     # Min-band candidates (dedup.minband_pair_union): each (query, neighbor)
     # pair is emitted once at its first shared band, so no cross-band
     # distinct of the vector-carrying candidate stream; the corpus side is
-    # never shuffled (broadcast query side in every per-band join).
+    # never shuffled (the banded join broadcasts the query side).
     from .dedup import minband_pair_union
 
     # per-row norms ride the sketch frames (corpus side persisted), so the

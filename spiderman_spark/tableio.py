@@ -89,10 +89,11 @@ class ParquetManifestTable:
         if not m["files"]:
             return None  # caller supplies schema for the empty case
         reader = self.spark.read
+        # the engine knows its state-table schemas, and a replace snapshot
+        # records its own: either skips the per-read parquet footer
+        # inference (a Spark job per read)
+        ddl = ddl or m["props"].get("schema")
         if ddl is not None:
-            # the engine knows its state-table schemas: passing them skips
-            # the per-read parquet footer inference (a driver round trip the
-            # crawl loop would otherwise pay twice per round)
             reader = reader.schema(ddl)
         return reader.parquet(*[os.path.join(self.root, f) for f in m["files"]])
 
@@ -226,10 +227,13 @@ class ParquetManifestTable:
         return {"compacted": n_packed, "kept": kept, "bytes_read": bytes_read}
 
     def replace(self, df, props: dict | None = None) -> int:
-        """Replace table contents (snapshot-isolated truncate+write)."""
+        """Replace table contents (snapshot-isolated truncate+write); the
+        props record the data schema, so reads skip schema inference."""
         part = self._write_data(df)
         return self._commit(
-            [part], props or {}, sizes={part: self.part_bytes(part)}
+            [part],
+            {**(props or {}), "schema": df.schema.toDDL()},
+            sizes={part: self.part_bytes(part)},
         )
 
     # -------------------------------------------------- bucketed snapshots

@@ -83,6 +83,38 @@ def test_minhash_verify_join_broadcast_modes(spark):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
+def test_minhash_verify_broadcast_gate_counts_grams(spark, monkeypatch):
+    """The adaptive verify-join gate weighs grams, not rows alone: docs
+    with many grams refuse the broadcast under the row cap, few-gram docs
+    of the same count keep it, and the pairs do not depend on the choice."""
+    calls = []
+    real = dedup._verify_broadcast_ok
+
+    def spy(*args):
+        calls.append((args, real(*args)))
+        return calls[-1][1]
+
+    monkeypatch.setattr(dedup, "_verify_broadcast_ok", spy)
+    monkeypatch.setattr(dedup, "VERIFY_BROADCAST_MAX_BYTES", 64 << 10)
+    words = [f"w{i}" for i in range(400)]
+    many = [(i, " ".join(words[i:] + words[:i])) for i in range(40)]
+    few = [(i, " ".join(words[i:i + 10])) for i in range(40)]
+    got = {}
+    for name, rows in (("many", many), ("few", few)):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got[name] = dedup.minhash_lsh_pairs(
+            df, "doc_id", "text", n=1, k=8, bands=2, threshold=0.9,
+            hash_family="xxhash64",
+        )
+        (n_docs, width, max_rows, max_bytes), ok = calls[-1]
+        assert (n_docs, max_rows, max_bytes) == (40, 2_000_000, 64 << 10)
+        assert width == (400 if name == "many" else 10)
+        assert ok == (name == "few"), (name, width)
+    # every "many" doc holds the same 400 words: one clique of 40
+    assert got["many"].count() == 40 * 39 // 2
+    assert got["few"].count() == 0
+
+
 def test_minhash_materialize_releases_cache(spark):
     """ADVICE r2: repeated minhash calls must not accumulate persisted
     shingle frames."""

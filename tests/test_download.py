@@ -3,6 +3,8 @@ file phase, per-row image invariants (PSNR>=40dB / caption equality / phash —
 BASELINE.json input_hint), MERGE-back statuses, and skip/overwrite semantics.
 """
 
+import os
+
 import numpy as np
 import pytest
 
@@ -156,7 +158,7 @@ def test_download_resume_mid_run(spark, workdir, crawled):
     assert dl2.crawl_order().where("round = 99").count() == 0  # rolled back
     dl2.run()
 
-    wd_ref = workdir + "-uninterrupted"
+    wd_ref = os.path.join(workdir, "uninterrupted")
     ref_dl = make_downloader(spark, wd_ref, budget=2)
     ref_dl.make_job(crawled.items("zhifang_file"))
     ref_dl.run()

@@ -43,7 +43,7 @@ def test_fleet_two_workers_equals_single_engine(spark, workdir):
     seeds = sim.make_seeds(SPEC)
 
     single = CrawlEngine(
-        spark, corpus, workdir + "-single",
+        spark, corpus, os.path.join(workdir, "single"),
         CrawlConfig(callbacks=dict(CBS), default_budget=4),
     )
     single.seed(seeds)
@@ -53,7 +53,7 @@ def test_fleet_two_workers_equals_single_engine(spark, workdir):
     )
 
     W = 2
-    fd = workdir + "-fleet"
+    fd = os.path.join(workdir, "fleet")
     os.makedirs(fd, exist_ok=True)
     engines = [
         CrawlEngine(

@@ -2,6 +2,8 @@
 relationally and re-crawled to completeness.
 """
 
+import os
+
 from pyspark.sql import functions as F
 
 from spiderman_spark import corpusgen as cg
@@ -24,7 +26,7 @@ def crawl(spark, wd, seeds):
 
 
 def test_patch_rederives_missing_work(spark, workdir):
-    full = crawl(spark, workdir + "-full", sim.make_seeds(SPEC))
+    full = crawl(spark, os.path.join(workdir, "full"), sim.make_seeds(SPEC))
     list_full = full.items("zhifang_list")
     detail_full = full.items("zhifang_detail")
 
@@ -49,7 +51,7 @@ def test_patch_rederives_missing_work(spark, workdir):
         lambda p: cg.list_url(SPEC, p),
     )
     assert [s["callback"] for s in seeds[:2]] == ["list", "list"]
-    patched = crawl(spark, workdir + "-patch", seeds)
+    patched = crawl(spark, os.path.join(workdir, "patch"), seeds)
 
     # union of surviving + patched tables reaches full coverage
     list_all = list_lost.unionByName(patched.items("zhifang_list"))
@@ -78,7 +80,7 @@ def test_patch_seed_df_parity_with_list_path(spark, workdir):
     """VERDICT r2 #5: the DataFrame-native patch path (make_patch_seed_df +
     seed_from_df — no driver collect) must produce a frontier byte-identical
     to the Python-list path, and the subsequent crawl identical results."""
-    full = crawl(spark, workdir + "-full", sim.make_seeds(SPEC))
+    full = crawl(spark, os.path.join(workdir, "full"), sim.make_seeds(SPEC))
     list_lost = full.items("zhifang_list").where(~F.col("pagenum").isin("2", "4"))
     detail_lost = full.items("zhifang_detail").join(
         full.items("zhifang_list").where(F.col("pagenum") == "3")
@@ -91,7 +93,7 @@ def test_patch_seed_df_parity_with_list_path(spark, workdir):
         lambda p: cg.list_url(SPEC, p),
     )
     a = CrawlEngine(
-        spark, cg.build_crawl_corpus(spark, SPEC), workdir + "-a",
+        spark, cg.build_crawl_corpus(spark, SPEC), os.path.join(workdir, "a"),
         CrawlConfig(callbacks=dict(CBS), default_budget=8),
     )
     a.seed(seeds)
@@ -101,7 +103,7 @@ def test_patch_seed_df_parity_with_list_path(spark, workdir):
         lambda p: cg.list_url(SPEC, p),
     )
     b = CrawlEngine(
-        spark, cg.build_crawl_corpus(spark, SPEC), workdir + "-b",
+        spark, cg.build_crawl_corpus(spark, SPEC), os.path.join(workdir, "b"),
         CrawlConfig(callbacks=dict(CBS), default_budget=8),
     )
     n = b.seed_from_df(seed_df, order_by=["k0", "k1", "k2"])

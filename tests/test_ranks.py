@@ -3,6 +3,7 @@ bit-for-bit, with NO single-partition Exchange in the plan — the scale
 property the crawl round relies on (VERDICT round-1 item 3).
 """
 
+import os
 import random
 
 from spiderman_spark.operators import ranks
@@ -106,7 +107,7 @@ def test_hist_skew_fallback_in_step(spark, workdir, monkeypatch):
         monkeypatch.setattr(rounds, "HIST_MAX_GROUP", hist_max)
         range_ranks.clear()
         engine = CrawlEngine(
-            spark, cg.build_crawl_corpus(spark, spec), f"{workdir}-{tag}",
+            spark, cg.build_crawl_corpus(spark, spec), os.path.join(workdir, tag),
             CrawlConfig(callbacks={"list": True, "detail": False}, default_budget=4),
         )
         engine.seed(sim.make_seeds(spec))

@@ -227,3 +227,33 @@ def test_manifest_records_part_sizes(spark, tmp_path):
     tb.rollback_to(v)
     m = tb._manifest()
     assert set(m["sizes"]) == set(m["files"])  # sizes survive rollback
+
+
+def test_replace_records_schema_so_read_submits_no_job(spark, tmp_path):
+    """A replace snapshot records its data schema in the props, so a read
+    with no DDL skips parquet footer inference (a Spark job) and still
+    returns the written schema; an append commits no schema of its own."""
+    import time
+
+    tb = Catalog(spark, str(tmp_path)).table("t")
+    df = spark.createDataFrame(
+        [(1, "a", [2.0])], "id long, s string, v array<double>"
+    )
+    tb.replace(df.coalesce(1))
+    assert tb.props()["schema"] == df.schema.toDDL()
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        time.sleep(0.5)  # job events reach the tracker asynchronously
+        return set(tracker.getJobIdsForGroup(None))
+
+    before = jobs()
+    got = tb.read()
+    assert jobs() == before
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in df.schema
+    ]
+    assert got.collect() == df.collect()
+    tb.append(df.coalesce(1))
+    assert "schema" not in tb.props()
+    assert tb.read().count() == 2
