@@ -245,8 +245,8 @@ def q34_minhash_lsh_fast(spark, sf_dir):
 
 def q37_neardup_components(spark, sf_dir):
     """Cluster resolution over the q18 near-dup pairs: connected components
-    by min-label propagation → (did, rep), rep = the canonical (minimum) doc
-    id of each near-dup cluster.  Oracled by a DuckDB recursive CTE over the
+    (a driver union-find at this size) → (did, rep), rep = the canonical
+    (minimum) doc id of each near-dup cluster.  Oracled by a DuckDB recursive CTE over the
     identical q18 pair SQL."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
@@ -769,7 +769,7 @@ def oracle_sql() -> dict[str, str]:
     # q37 oracle: connected components over the q18 pairs via a recursive
     # CTE (symmetrize edges, expand reachability with UNION dedup, take the
     # min reachable id per vertex) — exact on the bounded-diameter near-dup
-    # graph, mirroring the engine's min-label propagation fixpoint.
+    # graph, the same labelling the engine's union-find reaches.
     sql["q37_neardup_components"] = (
         "WITH RECURSIVE p AS (SELECT id_a, id_b FROM"
         f" ({sql['q18_minhash_lsh']}) q),"

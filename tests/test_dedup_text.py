@@ -201,12 +201,12 @@ def test_winnow_fingerprints_theorem_and_reference(spark):
 
 
 def test_neardup_components_chain_clique(spark):
-    """q37 family: min-label propagation must resolve a multi-hop chain
+    """q37 family: the components labelling must resolve a multi-hop chain
     (diameter > 1), a clique, and an isolated pair to their minimum-id
     representatives — exactly what the recursive-CTE oracle computes."""
     pairs = spark.createDataFrame(
         [
-            # chain 1-2-3-4 (needs multiple propagation rounds)
+            # chain 1-2-3-4 (diameter 3)
             (1, 2), (2, 3), (3, 4),
             # clique 10,11,12
             (10, 11), (10, 12), (11, 12),

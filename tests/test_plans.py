@@ -153,6 +153,20 @@ def test_minhash_lsh_plan_has_one_band_join(spark):
     assert len(joins) == 3, joins  # the band join and the two verify joins
 
 
+def test_minhash_verify_intersects_once_per_operator(spark):
+    """The verify's set intersection is bound once: no operator of the lazy
+    plan evaluates ``array_intersect`` more than once (a column alias is
+    inlined into every use, and the join condition computed it twice)."""
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    for family in ("md5", "xxhash64"):
+        lazy = dedup.minhash_lsh_pairs(
+            docs, "doc_id", "text", n=1, k=32, bands=8, threshold=0.6,
+            hash_family=family, materialize=False,
+        )
+        counts = [b.count("array_intersect(") for b in _plan_blocks(plan_of(lazy))]
+        assert max(counts) == 1, (family, counts)
+
+
 def test_embedding_verify_broadcast_gate_is_bytes_aware(spark):
     """A row-count-only gate would force a multi-GB broadcast at production
     embedding dims; the verify-join gate must also bound estimated bytes."""
